@@ -27,6 +27,10 @@ from sales_data_warehouse_spark.operators.time_dimension import (
     build_time_dimension,
     merge_time_dimension,
 )
+from sales_data_warehouse_spark.sources.compaction import (
+    recover_staged,
+    staged_overwrite,
+)
 from sales_data_warehouse_spark.sources.csv_ingest import ingest_csv
 from sales_data_warehouse_spark.sources.parquet_io import write_table
 
@@ -42,6 +46,54 @@ class EtlResult:
     location_dimension: DataFrame
     product_dimension: DataFrame
     fact: DataFrame
+
+
+def _job_pool(spark: SparkSession):
+    """A small thread pool for submitting independent Spark jobs at once;
+    returns ``(submit, pool)``. The scheduler overlaps the jobs: each
+    job's tail (the straggling last tasks of a write) is back-filled by
+    the next job's tasks instead of leaving the executors idle, so
+    independent writes cost ~max(job_i) instead of sum(job_i) while the
+    cluster has headroom. ``submit(fn, *args)`` runs ``fn`` under
+    ``pyspark.inheritable_thread_target``, so the worker inherits the
+    caller's JVM-local properties — job group, description, scheduler
+    pool: ``cancelJobGroup`` reaches every job, and the UI files them
+    under the caller's group. The wrapper is made per call because it
+    snapshots the properties once and hands that one object to every
+    call; two workers sharing it would overwrite each other's job
+    description."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    # the increment's widest phase: both appends may still run beside
+    # the three dimension replaces and the fact append
+    pool = ThreadPoolExecutor(max_workers=6)
+
+    def submit(fn, *args):
+        return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+    return submit, pool
+
+
+def _write(
+    df: DataFrame,
+    output_dir: str,
+    name: str,
+    partition_by: list | None = None,
+    mode: str = "overwrite",
+) -> None:
+    """Write ``df`` as table ``name``; ``mode="replace"`` swaps it in
+    crash-safely (``staged_overwrite``: the previous table survives a
+    failed write). Job descriptions are thread-local, so each concurrent
+    write labels its own jobs."""
+    spark = df.sparkSession
+    spark.sparkContext.setJobDescription(f"etl: write {name}")
+    path = f"{output_dir}/{name}"
+    if mode == "replace":
+        staged_overwrite(spark, df, path)
+    else:
+        write_table(df, path, partition_by=partition_by, mode=mode)
 
 
 def run_etl(
@@ -74,38 +126,20 @@ def run_etl(
         landing = landing.persist(StorageLevel.MEMORY_AND_DISK)
     cleansed, invalid = cleanse(landing)
     if output_dir:
-        # Independent jobs are submitted from a small thread pool so the
-        # scheduler overlaps them: each job's tail (the straggling last
-        # tasks of a write) is back-filled by the next job's tasks
-        # instead of leaving the executors idle. Sequentially the writes
-        # cost sum(job_i); overlapped they cost ~max(job_i) when the
-        # cluster has headroom — which it has here by construction,
-        # since each is a small dimension-sized output next to the
-        # fact. Dependency structure (r15 widened the r14 two-phase
-        # barrier to the real DAG):
+        # Dependency DAG of the writes (see _job_pool for the overlap):
         #   * cleansed write — everything downstream needs its parquet;
         #   * invalid write — a LEAF: nothing reads it, so it overlaps
-        #     the dimension builds AND the fact build instead of
-        #     barriering phase B behind it (its only shared input is
-        #     the cached landing; concurrent materialization of the
-        #     same cached partitions is safe — the block manager
+        #     the dimension builds AND the fact build (its only shared
+        #     input is the cached landing; concurrent materialization of
+        #     the same cached partitions is safe — the block manager
         #     computes each missing block once, the other job waits on
         #     the block lock);
-        #   * each dimension's BUILD + write runs in its own worker:
-        #     build_time_dimension's eager min/max-date job used to run
-        #     serially on the main thread before any dim write started.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write(df: DataFrame, name: str, part: list | None) -> None:
-            # job descriptions are thread-local — label each concurrent
-            # job so the UI attributes tasks to the right write
-            spark.sparkContext.setJobDescription(f"etl: write {name}")
-            write_table(df, f"{output_dir}/{name}", partition_by=part)
-
-        pool = ThreadPoolExecutor(max_workers=4)
+        #   * the three dimension writes run at once;
+        #   * the fact write, after all three.
+        submit, pool = _job_pool(spark)
         try:
-            f_cleansed = pool.submit(_write, cleansed, "cleansed", None)
-            f_invalid = pool.submit(_write, invalid, "invalid", None)
+            f_cleansed = submit(_write, cleansed, output_dir, "cleansed")
+            f_invalid = submit(_write, invalid, output_dir, "invalid")
             f_cleansed.result()
             cleansed = spark.read.parquet(f"{output_dir}/cleansed")
             # Write each dimension BEFORE the fact build and re-read it
@@ -113,9 +147,7 @@ def run_etl(
             # re-executes every dimension's window pipeline once per
             # downstream action.
             dim_futures = [
-                pool.submit(
-                    lambda b, n: _write(b(cleansed), n, None), builder, name
-                )
+                submit(_write, builder(cleansed), output_dir, name)
                 for builder, name in [
                     (build_time_dimension, "time_dimension"),
                     (build_location_dimension, "location_dimension"),
@@ -132,7 +164,7 @@ def run_etl(
             fact = build_fact(cleansed, prod_dim, loc_dim, time_dim)
             if dense:
                 fact = dense_fact(fact, prod_dim, loc_dim, time_dim)
-            _write(fact, "fact", ["month_id"])
+            submit(_write, fact, output_dir, "fact", ["month_id"]).result()
             fact = spark.read.parquet(f"{output_dir}/fact")
             # the one remaining landing consumer — surfacing its error
             # (if any) before this function reports success
@@ -146,7 +178,6 @@ def run_etl(
             # plan stays valid (recomputes if re-used).
             pool.shutdown(wait=True)
             landing.unpersist()
-            spark.sparkContext.setJobDescription(None)
     else:
         cleansed = cleansed.cache()
         time_dim = build_time_dimension(cleansed)
@@ -181,6 +212,15 @@ def register_views(spark: SparkSession, result: EtlResult) -> None:
     result.fact.createOrReplaceTempView("fact_table")
 
 
+def _merge(merge, prior: DataFrame, cleansed_new: DataFrame, name: str):
+    """One dimension merge, materialized: ``localCheckpoint`` computes
+    the merged rows once for both consumers (the fact build and the
+    dimension replace) and cuts the plan loose from the prior parquet
+    that the replace swaps out."""
+    prior.sparkSession.sparkContext.setJobDescription(f"etl: merge {name}")
+    return merge(prior, cleansed_new).localCheckpoint()
+
+
 def run_etl_increment(
     spark: SparkSession,
     csv_path: str,
@@ -203,43 +243,78 @@ def run_etl_increment(
       * fact — built for the new order lines against the MERGED
         dimensions; appended (month-partitioned, so a month's partition
         only grows while it is active).
+
+    The merges make no driver round-trips: the id offsets (each
+    location level's maximum, the product count) and the calendar's
+    date range are 1-row aggregates inside their plans, so building a
+    merge submits no Spark job. The increment then runs as a
+    dependency DAG on the ``run_etl`` job pool (the reference runs its
+    stages one after another, ``MotherProcedure.sql:7-22``):
+
+      1. the cleansed and invalid appends and the three
+         merge + ``localCheckpoint`` steps are submitted at once (the
+         parsed CSV and the cleansed batch, which five jobs read, are
+         persisted and released in a ``finally``);
+      2. once the merges are done, the three dimension replaces and
+         the fact append run at once.
+
+    Each dimension is replaced crash-safely (``staged_overwrite``, the
+    protocol the streaming fold uses for the same tables), and a swap
+    that crashed half-way is recovered before the prior dimensions are
+    read, so a failed increment never loses a dimension. All jobs
+    inherit the caller's job group (``_job_pool``).
     """
-    landing = ingest_csv(spark, csv_path)
+    from pyspark import StorageLevel
+
+    prior = {}
+    for name in ("location_dimension", "product_dimension", "time_dimension"):
+        recover_staged(spark, f"{output_dir}/{name}")
+        prior[name] = spark.read.parquet(f"{output_dir}/{name}")
+
+    landing = ingest_csv(spark, csv_path).persist(StorageLevel.MEMORY_AND_DISK)
     cleansed_new, invalid_new = cleanse(landing)
-    cleansed_new = cleansed_new.cache()
-
-    prior_loc = spark.read.parquet(f"{output_dir}/location_dimension")
-    prior_prod = spark.read.parquet(f"{output_dir}/product_dimension")
-    prior_time = spark.read.parquet(f"{output_dir}/time_dimension")
-
-    # localCheckpoint materializes the merged dims and truncates lineage:
-    # their plans read the very parquet paths the writes below overwrite,
-    # which Spark (rightly) refuses while a live plan still references
-    # them.
-    loc_dim = merge_location_dimension(prior_loc, cleansed_new).localCheckpoint()
-    prod_dim = merge_product_dimension(prior_prod, cleansed_new).localCheckpoint()
-    time_dim = merge_time_dimension(prior_time, cleansed_new).localCheckpoint()
-
-    fact_new = build_fact(cleansed_new, prod_dim, loc_dim, time_dim)
-
-    write_table(cleansed_new, f"{output_dir}/cleansed", mode="append")
-    write_table(invalid_new, f"{output_dir}/invalid", mode="append")
-    write_table(time_dim, f"{output_dir}/time_dimension")
-    write_table(loc_dim, f"{output_dir}/location_dimension")
-    write_table(prod_dim, f"{output_dir}/product_dimension")
-    write_table(
-        fact_new,
-        f"{output_dir}/fact",
-        partition_by=["month_id"],
-        mode="append",
-    )
+    cleansed_new = cleansed_new.persist(StorageLevel.MEMORY_AND_DISK)
+    submit, pool = _job_pool(spark)
+    try:
+        appends = [
+            submit(_write, cleansed_new, output_dir, "cleansed", None, "append"),
+            submit(_write, invalid_new, output_dir, "invalid", None, "append"),
+        ]
+        merges = {
+            name: submit(_merge, merge, prior[name], cleansed_new, name)
+            for name, merge in [
+                ("location_dimension", merge_location_dimension),
+                ("product_dimension", merge_product_dimension),
+                ("time_dimension", merge_time_dimension),
+            ]
+        }
+        dims = {name: f.result() for name, f in merges.items()}
+        fact_new = build_fact(
+            cleansed_new,
+            dims["product_dimension"],
+            dims["location_dimension"],
+            dims["time_dimension"],
+        )
+        writes = [
+            submit(_write, dim, output_dir, name, None, "replace")
+            for name, dim in dims.items()
+        ]
+        writes.append(
+            submit(_write, fact_new, output_dir, "fact", ["month_id"], "append")
+        )
+        for f in appends + writes:
+            f.result()
+    finally:
+        pool.shutdown(wait=True)
+        cleansed_new.unpersist()
+        landing.unpersist()
 
     return EtlResult(
         landing=landing,
         invalid=invalid_new,
         cleansed=spark.read.parquet(f"{output_dir}/cleansed"),
-        time_dimension=time_dim,
-        location_dimension=loc_dim,
-        product_dimension=prod_dim,
+        time_dimension=dims["time_dimension"],
+        location_dimension=dims["location_dimension"],
+        product_dimension=dims["product_dimension"],
         fact=spark.read.parquet(f"{output_dir}/fact"),
     )

@@ -83,15 +83,27 @@ def merge_location_dimension(
         how="left_anti",
     )
 
+    # The four level maxima as ONE 1-row aggregate, broadcast into the
+    # appended rows: the id numbering stays inside the plan, so building
+    # the merge submits no Spark job.
+    maxima = existing.agg(
+        *[
+            F.coalesce(
+                F.max(F.substring(id_col, len(prefix) + 1, 10).cast("int")),
+                F.lit(0),
+            ).alias(f"__max_{id_col}")
+            for prefix, id_col in (
+                ("SA", "state_id"),
+                ("C", "city_id"),
+                ("S", "street_id"),
+                ("L", "location_id"),
+            )
+        ]
+    )
+
     def _next(prefix: str, id_col: str, width: int, rn: F.Column) -> F.Column:
         # continue after the existing max numeric suffix for this level
-        base = existing.agg(
-            F.coalesce(
-                F.max(F.substring(F.col(id_col), len(prefix) + 1, 10).cast("int")),
-                F.lit(0),
-            ).alias("m")
-        ).first()["m"]
-        return padded_id(prefix, rn + F.lit(base), width)
+        return padded_id(prefix, rn + F.col(f"__max_{id_col}"), width)
 
     # level ids for unseen keys: reuse an existing level id when the
     # level key is already known, else mint the next one
@@ -109,6 +121,7 @@ def merge_location_dimension(
     appended = (
         unseen.join(F.broadcast(state_lvl), ["state", "postal"], "left")
         .join(F.broadcast(city_lvl), ["city", "state", "postal"], "left")
+        .crossJoin(F.broadcast(maxima))
         .withColumn("__rn", F.row_number().over(w_new))
         .withColumn(
             "state_id",

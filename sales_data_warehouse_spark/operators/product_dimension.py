@@ -67,21 +67,23 @@ def merge_product_dimension(
     # when a new product sorts before an old one; consumers (fact rows)
     # that stored product_id need existing ids kept verbatim and new
     # products numbered past the current max.
+    # The existing product count is a 1-row aggregate broadcast into the
+    # new names, so building the merge submits no Spark job.
     existing_ids = existing.select("product_name", "product_id").distinct()
-    n_existing = existing_ids.count()
+    n_existing = existing_ids.agg(F.count(F.lit(1)).alias("__n_existing"))
     new_names = (
         merged.select("product_name")
         .distinct()
         .join(existing_ids, "product_name", "left_anti")
     )
-    new_ids = new_names.withColumn(
-        "product_id",
+    new_ids = new_names.crossJoin(F.broadcast(n_existing)).select(
+        "product_name",
         padded_id(
             "P",
             F.dense_rank().over(Window.orderBy("product_name"))
-            + F.lit(n_existing),
+            + F.col("__n_existing"),
             6,
-        ),
+        ).alias("product_id"),
     )
     return _dim_from_versions(
         merged, id_map=existing_ids.unionByName(new_ids)

@@ -7,10 +7,10 @@ join denormalizing day->week->month->quarter->half->year (:208-256).
 
 Spark-first: the whole dimension is a *pure function of the date range*.
 Every hierarchy id derives from date arithmetic (no iteration-order
-counters — rationalizes quirks Q2/Q3/Q7), so the spine can be built on any
-number of partitions with zero shuffles and no joins at all: the 5-way
-hierarchy join collapses into per-row expressions because the parent of a
-day is computable from the day itself.
+counters — rationalizes quirks Q2/Q3/Q7), so the spine is one exploded
+date sequence over a 1-row min/max aggregate and the hierarchy needs no
+joins at all: the 5-way hierarchy join collapses into per-row expressions
+because the parent of a day is computable from the day itself.
 
 Id scheme (documented rationalization of reference formats):
   time_id      D + yyyyMMdd            (Q2: reference's 'YYYYDDMM' is a bug)
@@ -23,45 +23,33 @@ Id scheme (documented rationalization of reference formats):
 
 from __future__ import annotations
 
-import datetime as dt
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def date_spine(
-    spark: SparkSession, start: dt.date, end: dt.date
-) -> DataFrame:
-    """All days in [start, end] — reference ``generate_series`` (F10).
-
-    Built via ``F.sequence`` + ``explode``; for multi-century spines this
-    is still a single tiny row exploded in one task, then repartitioned by
-    Spark on use.
-    """
-    return spark.range(1).select(
+def _calendar(dates: DataFrame) -> DataFrame:
+    """Every day in [min(d), max(d)] of a one-column frame of dates ``d``
+    — the reference's min/max + ``generate_series`` (``TimeDimension.sql:
+    45-50``, F10) as ``explode(sequence(lo, hi))`` over a 1-row
+    aggregate. The bounds stay inside the plan, so building a calendar
+    submits no Spark job; with no dates the bounds are null, the
+    sequence is null and the calendar is empty."""
+    bounds = dates.agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
+    spine = bounds.select(
         F.explode(
-            F.sequence(
-                F.lit(start).cast("date"),
-                F.lit(end).cast("date"),
-                F.expr("interval 1 day"),
-            )
+            F.sequence("lo", "hi", F.expr("interval 1 day"))
         ).alias("time_desc")
     )
+    return with_time_hierarchy(spine)
 
 
 def build_time_dimension(cleansed: DataFrame) -> DataFrame:
     """Calendar covering [min(order_date), max(order_date)] inclusive
     (reference ``TimeDimension.sql:45-50``) — on the reference CSV that
-    yields 32 days (2019-01-01..2019-02-01).
+    yields 32 days (2019-01-01..2019-02-01). A ``cleansed`` frame with
+    no rows yields an empty dimension.
     """
-    spark = cleansed.sparkSession
-    bounds = cleansed.agg(
-        F.min("order_date").alias("lo"), F.max("order_date").alias("hi")
-    ).first()
-    if bounds["lo"] is None:
-        raise ValueError("cleansed has no order dates")
-    spine = date_spine(spark, bounds["lo"], bounds["hi"])
-    return with_time_hierarchy(spine)
+    return _calendar(cleansed.select(F.col("order_date").alias("d")))
 
 
 def merge_time_dimension(
@@ -75,16 +63,11 @@ def merge_time_dimension(
     and is calendar-sized — the one dimension where rebuild IS the
     cheapest stable merge.
     """
-    spark = existing.sparkSession
-    old = existing.agg(
-        F.min("time_desc").alias("lo"), F.max("time_desc").alias("hi")
-    ).first()
-    new = cleansed_new.agg(
-        F.min("order_date").alias("lo"), F.max("order_date").alias("hi")
-    ).first()
-    lo = min(d for d in (old["lo"], new["lo"]) if d is not None)
-    hi = max(d for d in (old["hi"], new["hi"]) if d is not None)
-    return with_time_hierarchy(date_spine(spark, lo, hi))
+    return _calendar(
+        existing.select(F.col("time_desc").alias("d")).unionByName(
+            cleansed_new.select(F.col("order_date").alias("d"))
+        )
+    )
 
 
 def with_time_hierarchy(spine: DataFrame) -> DataFrame:
