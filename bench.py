@@ -1032,45 +1032,6 @@ def main() -> None:
                     "stable = code regression; moves tracking a probe "
                     "= machine drift on that axis."
                 ),
-                # r11 isolated attribution of the driver-r10 ETL-extras
-                # jump (run_etl 4.43->6.43, dense_fact 6.95->9.33,
-                # streaming_etl +37% vs driver r9, all on code untouched
-                # since r8 and a FLAT parquet-write probe): a fresh-
-                # session 4x rerun ALONE on the builder box measured
-                # run_etl [12.43 cold, 5.11, 4.75, 5.60], dense_fact
-                # [11.25 cold, 7.23, 7.54, 7.59], streaming_etl [2.38
-                # cold, 1.47, 1.54, 1.48] — warm minima 4.75 / 7.23 /
-                # 1.47 match the r9 driver / builder levels, so the
-                # driver-r10 elevation is box contention on that run
-                # (the r9-documented tail-contention mode), not a code
-                # regression; nothing to bisect.
-                "etl_extras_note": (
-                    "driver-r10 run_etl/dense_fact/streaming_etl "
-                    "elevation attributed to driver-box contention: "
-                    "isolated fresh-session warm minima on the same "
-                    "code are 4.75 / 7.23 / 1.47 s, matching r9 levels "
-                    "(measured r11; see comment above this field)"
-                ),
-                # r13: the box entered a degraded-throughput window
-                # mid-round — same-code builder headlines swung
-                # 23.8 -> 29.6 -> 52.8 s within hours at a stable JVM
-                # probe (0.105-0.114), load average ~10 with this
-                # container idle, zero steal, zero iowait. An
-                # interleaved attrib_rerun A/Bs of the prior-close
-                # commit vs the current tree (r12-vs-r13 and
-                # r13-vs-r14) read fully overlapping warm ranges
-                # (README builder notes), so ANY elevated headline on
-                # this host class should be read against those A/Bs
-                # before suspecting code.
-                "host_volatility_note": (
-                    "r13 builder same-code headline swing 23.8-52.8 s "
-                    "at stable probes; r14 repeated the shape at "
-                    "smaller amplitude (19.9-27.4 s across four runs) "
-                    "and BOTH rounds' interleaved prior-vs-current "
-                    "A/Bs show overlapping per-query ranges — "
-                    "elevation is a host parallel-throughput axis the "
-                    "1-thread probes do not see (README builder notes)"
-                ),
                 "input_rows": input_rows,
                 "calibration": {
                     "probe_range_sum_sec": round(probe, 3),
@@ -1167,8 +1128,6 @@ def main() -> None:
         "the pipeline rows). Freeform attribution notes live in "
         f"BENCH_full_r{rnd:02d}.json."
     )
-    slim.pop("etl_extras_note", None)
-    slim.pop("host_volatility_note", None)
     if isinstance(slim.get("sf1"), dict):
         sf1_slim = dict(slim["sf1"])
         sf1_slim.pop("scaling_note", None)

@@ -14,8 +14,8 @@ provides:
   shuffle + sort, no Python, the plan that survives both sides huge
   (r7; SURVEY J8 option (b)). ``engine='cogroup'`` keeps the pandas
   ``merge_asof`` verification twin.
-* :func:`asof_join_auto` — routes between the two by a memoized
-  one-count probe of the versioned side.
+* :func:`asof_join_auto` — routes between the two by the versioned
+  side's size estimate (``session.fits_broadcast``).
 
 All plans support three directions (backward/forward/nearest, with
 pandas merge_asof's prefer-backward tie rule), ``tolerance`` (bounded
@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from sales_data_warehouse_spark.session import fits_broadcast
 
 
 def _ts_micros(col: F.Column, dtype: T.DataType) -> F.Column:
@@ -196,16 +198,6 @@ def _warn_mixed_numeric_keys(
     warnings.warn(msg, UserWarning, stacklevel=stacklevel)
 
 
-#: (applicationId, plan semanticHash) -> right-side row count. The
-#: broadcast guard's count is pure plan metadata within one Spark
-#: application (same files-immutable assumption as the corpus table
-#: cache), so repeated asof calls over the same versioned side — the
-#: common shape: one price list, many fact queries — pay the probe job
-#: once, not per call. Bounded by the number of distinct right-side
-#: plans in a session.
-_GUARD_COUNT_CACHE: dict[tuple[str, int], int] = {}
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -216,7 +208,6 @@ def asof_join(
     direction: str = "backward",
     broadcast_right: bool = True,
     unique_left: bool = False,
-    broadcast_row_limit: int | None = None,
     envelope_prefilter: bool = False,
     tolerance=None,
     allow_exact_matches: bool = True,
@@ -243,37 +234,19 @@ def asof_join(
     re-shuffling on a meaningless unique id. With duplicate left keys it
     would collapse rows — leave it False there.
 
-    ``broadcast_row_limit`` (opt-in) guards against silently
-    broadcasting a huge versioned side: when set and ``right`` exceeds
-    that many rows, the call raises with a pointer to
-    :func:`asof_join_grouped`, the both-sides-huge path. The probe is
-    one ``count()`` job — a narrow FULL pass of the right side whose
-    partial aggregation ships one row per partition (the previous
-    ``limit(N+1).count()`` formulation planned LocalLimit ->
-    single-partition exchange -> GlobalLimit, shipping up to N+1 rows
-    from every partition through the shuffle, without actually
-    stopping early either). Be explicit about the trade: when the
-    guard PASSES, the count costs no more than the broadcast build
-    would have scanned anyway, and the memo (per application + plan)
-    makes repeat calls free; when the guard FIRES on a genuinely huge
-    side, you pay one full narrow scan for the loud failure. If even
-    that scan is unacceptable — or the right side is an expensive
-    derived pipeline (e.g. an SCD2 build) — skip the guard (None) and
-    route huge sides to :func:`asof_join_grouped` yourself;
-    broadcasting a too-big side without the guard fails at Spark's own
-    broadcast limits rather than silently succeeding.
+    This plan broadcasts ``right`` without checking its size; a
+    too-big side fails at Spark's own broadcast limits rather than
+    silently succeeding. :func:`asof_join_auto` checks it first.
 
     Choosing between this plan and :func:`asof_join_grouped`: this
     broadcast + ``max_by`` plan wins whenever the versioned side fits
     in a broadcast (1.75 s at 600 k facts -> 1.98 s at 6 M on the
-    pricing oracle, BENCH_full_r06). Past the broadcast limit — rule
-    of thumb ~10-50 M version rows, or wherever
-    ``broadcast_row_limit`` / Spark's broadcast threshold fires —
-    use :func:`asof_join_grouped`: since round 7 its default union
-    engine is pure JVM (one co-keyed shuffle + sort + running-last
-    window, ~1.8 s warm on the same oracle at sf0.1, vs the retired
-    pandas-cogroup default's flat ~26 s Arrow tax) and stays bounded
-    by the largest single key.
+    pricing oracle, BENCH_full_r06). Past the broadcast limit, where
+    ``session.fits_broadcast`` says no, use :func:`asof_join_grouped`:
+    since round 7 its default union engine is pure JVM (one co-keyed
+    shuffle + sort + running-last window, ~1.8 s warm on the same
+    oracle at sf0.1, vs the retired pandas-cogroup default's flat
+    ~26 s Arrow tax) and stays bounded by the largest single key.
 
     ``envelope_prefilter=True`` prunes right-side versions that cannot
     match ANY left row before the join: for backward joins, versions
@@ -306,23 +279,6 @@ def asof_join(
             "asof_join: envelope_prefilter cannot prune for "
             "direction='nearest' — every version is reachable"
         )
-
-    if broadcast_right and broadcast_row_limit is not None:
-        sc_app = left.sparkSession.sparkContext.applicationId
-        key = (sc_app, right.semanticHash())
-        n_right = _GUARD_COUNT_CACHE.get(key)
-        if n_right is None:
-            n_right = right.count()
-            _GUARD_COUNT_CACHE[key] = n_right
-        if n_right > broadcast_row_limit:
-            raise ValueError(
-                f"asof_join: right side exceeds the broadcast guard of "
-                f"{broadcast_row_limit} rows; use asof_join_grouped "
-                "(pure-JVM union-tag/window engine, the both-sides-"
-                "huge path) or asof_join_auto (routes on this same "
-                "count), or pass broadcast_right=False for a shuffle "
-                "join"
-            )
 
     if envelope_prefilter:
         # 1-row aggregate broadcast into a theta-join filter: prunes
@@ -438,38 +394,30 @@ def asof_join_auto(
     right_ts: str,
     *,
     direction: str = "backward",
-    broadcast_row_limit: int = 10_000_000,
+    unique_left: bool = False,
     tolerance=None,
     allow_exact_matches: bool = True,
     envelope_prefilter: bool = False,
 ) -> DataFrame:
     """Route to the right physical as-of plan by the versioned side's
-    size: at or under ``broadcast_row_limit`` rows, the broadcast +
-    ``max_by`` plan (1.8-2.0 s on the pricing oracle — wins while the
-    side fits a broadcast); over it, :func:`asof_join_grouped`'s
-    pure-JVM union engine (one co-keyed shuffle + sort, the shape that
-    survives both sides huge) instead of raising like ``asof_join``'s
-    guard does.
+    size: when ``right`` fits a broadcast (``session.fits_broadcast``:
+    the optimizer's size estimate with a decompression margin, at or
+    under ``spark.sql.autoBroadcastJoinThreshold``), the broadcast +
+    ``max_by`` plan (1.8-2.0 s on the pricing oracle); otherwise
+    :func:`asof_join_grouped`'s pure-JVM union engine (one co-keyed
+    shuffle + sort, the shape that survives both sides huge).
 
-    The probe is the same memoized one-``count()`` job as the guard
-    (per application + plan semantic hash, so the common shape — one
-    price list, many queries — pays it once). If even one narrow scan
-    of the right side is unacceptable, or the right side is an
-    expensive derived pipeline, route yourself: call ``asof_join`` or
-    ``asof_join_grouped`` directly. ``envelope_prefilter`` applies
-    only on the broadcast route (the union engine never builds a
-    candidate set to prune).
+    The probe reads plan statistics only and submits no job; an
+    unreadable estimate picks the union engine. ``unique_left`` and
+    ``envelope_prefilter`` apply only on the broadcast route (the union
+    engine neither groups by a row id nor builds a candidate set to
+    prune).
     """
-    sc_app = left.sparkSession.sparkContext.applicationId
-    key = (sc_app, right.semanticHash())
-    n_right = _GUARD_COUNT_CACHE.get(key)
-    if n_right is None:
-        n_right = right.count()
-        _GUARD_COUNT_CACHE[key] = n_right
-    if n_right <= broadcast_row_limit:
+    if fits_broadcast(right):
         return asof_join(
             left, right, on, left_ts, right_ts,
             direction=direction,
+            unique_left=unique_left,
             tolerance=tolerance,
             allow_exact_matches=allow_exact_matches,
             envelope_prefilter=envelope_prefilter,
@@ -531,8 +479,9 @@ def asof_join_grouped(
 
     Crossover vs :func:`asof_join`: broadcast + ``max_by`` wins while
     the versioned side fits in a broadcast (~1.8-2.0 s on the pricing
-    oracle); reach for this plan past the broadcast limit (~10-50 M
-    version rows, or when ``broadcast_row_limit`` fires). The union
+    oracle); reach for this plan past the broadcast limit, where
+    ``session.fits_broadcast`` says no (about 9 M rows of the pricing
+    oracle's price list at the 32 MiB default threshold). The union
     engine's cost is one co-keyed shuffle + sort of left+right, the
     same shape as any co-partitioned join, so it stays cheap on the
     whole curve instead of paying the cogroup engine's flat Arrow tax.

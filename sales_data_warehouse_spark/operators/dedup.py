@@ -36,6 +36,7 @@ from sales_data_warehouse_spark.operators.caching import (  # noqa: E402
     multi_consumer_cache as _multi_consumer_cache,
     release_cache_with as _release_cache_with,
 )
+from sales_data_warehouse_spark.session import fits_broadcast  # noqa: E402
 
 
 def _spread(df: DataFrame, id_col: str) -> DataFrame:
@@ -1477,8 +1478,10 @@ def ngram_decontaminate(
     ``exploded_shingles``), dedup per doc, then ONE inner join on the
     shingle key with the benchmark side reduced to its distinct shingle
     set — at 100 TB the benchmark set is tiny next to the training
-    corpus (millions vs billions of docs), so Spark/AQE broadcasts it
-    and the training side never shuffles. Overlap counts aggregate on
+    corpus (millions vs billions of docs), so it is broadcast and the
+    training side never shuffles. The broadcast is forced only while
+    ``session.fits_broadcast`` says the set fits; past that the join
+    is left to the planner. Overlap counts aggregate on
     ``doc`` (map-side partial), and per-doc shingle totals ride along
     via a groupBy on the same exploded child instead of a second scan.
 
@@ -1499,9 +1502,11 @@ def ngram_decontaminate(
         .select("shingle")
         .distinct()
     )
+    if fits_broadcast(bench):
+        bench = F.broadcast(bench)
     sizes = tr.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
     overlap = (
-        tr.join(F.broadcast(bench), "shingle")
+        tr.join(bench, "shingle")
         .groupBy("doc")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )

@@ -443,10 +443,13 @@ def tfidf_top_terms(
     makes the *ranking* bit-identical across engines (a log-based score
     can flip near-ties in the last ulp). Ties broken by term ascending.
 
-    Plan: explode tokens once; tf = groupBy(doc, term), df = groupBy
-    (term) over the distinct (doc, term) pairs of the SAME exploded
-    child (exchange-reusable); df joins back on term; one window
-    row_number per doc picks the top k.
+    Plan: tf = groupBy(doc, term) over the exploded tokens, df =
+    groupBy(term) over tf's (doc, term) keys; df joins back on term;
+    one window row_number per doc picks the top k. The df branch does
+    NOT reuse the tf exchange: column pruning drops its unused count,
+    so its (doc, term) aggregate becomes a distinct (``functions=[]``)
+    that no longer matches tf's, and the executed plan scans and
+    explodes ``docs`` twice.
     """
     toks = docs.select(
         F.col(id_col),

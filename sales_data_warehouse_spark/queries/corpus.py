@@ -35,13 +35,17 @@ from sales_data_warehouse_spark.operators import (
     similarity,
     text,
 )
-from sales_data_warehouse_spark.operators.asof import asof_join
+from sales_data_warehouse_spark.operators.asof import (
+    asof_join,
+    asof_join_auto,
+)
 from sales_data_warehouse_spark.operators.multimodal import (
     attach_binary_payload,
     decode_batch,
     extract_features,
     sample_frames,
 )
+from sales_data_warehouse_spark.session import fits_broadcast
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -111,70 +115,6 @@ def _load_table_uncached(
             )
         return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-#: memoized driver-side byte probe per (app, sf_dir, table) — same
-#: keying discipline as _TABLE_CACHE / the as-of router's count memo.
-_TABLE_BYTES_CACHE: dict[tuple[str, str, str], int] = {}
-
-
-def _parse_size_bytes(value: str) -> int:
-    """Spark size-conf string -> bytes; -1 on anything unparseable or
-    non-positive (broadcast disabled), which routes to the shuffle plan
-    — the scale-safe default."""
-    s = value.strip().lower()
-    mult = 1
-    if s.endswith("b"):
-        s = s[:-1]
-    for suffix, m in (("k", 1024), ("m", 1024**2), ("g", 1024**3)):
-        if s.endswith(suffix):
-            s, mult = s[:-1], m
-            break
-    try:
-        n = int(s) * mult
-    except ValueError:
-        return -1
-    return n if n > 0 else -1
-
-
-def _tables_fit_broadcast(
-    spark: SparkSession, sf_dir: str, *names: str
-) -> bool:
-    """Route small-vs-large physical plans on the on-disk size of the
-    named tables vs the session's autoBroadcastJoinThreshold (guide
-    §3.1: pick the join strategy deliberately, from a signal you
-    control — the optimizer's estimates, not being wired through a
-    two-level aggregate, never collapse the eager shape on their own).
-
-    Parquet bytes UNDER-estimate in-memory broadcast size, but the
-    probe compares the FULL table's bytes where only a 2-column
-    projection broadcasts — conservative in the right direction. The
-    probe is a driver-side FileSystem metadata call (no job), memoized
-    per application+path like _TABLE_CACHE. Any error (missing path,
-    unparseable threshold, broadcast disabled) routes to the shuffle
-    plan: at 100 TB the large route is the one that must never be
-    mis-picked.
-    """
-    from sales_data_warehouse_spark.sources.compaction import table_bytes
-
-    threshold = _parse_size_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "-1")
-    )
-    if threshold <= 0:
-        return False
-    app = spark.sparkContext.applicationId
-    for name in names:
-        key = (app, sf_dir, name)
-        size = _TABLE_BYTES_CACHE.get(key)
-        if size is None:
-            try:
-                size = table_bytes(spark, f"{sf_dir}/{name}.parquet")
-            except Exception:  # noqa: BLE001 — unreadable: route large
-                size = -1
-            _TABLE_BYTES_CACHE[key] = size
-        if size < 0 or size > threshold:
-            return False
-    return True
 
 
 from sales_data_warehouse_spark.functions import money as _money  # noqa: E402
@@ -364,40 +304,37 @@ def join_multiway(spark: SparkSession, sf: str) -> DataFrame:
     """J1/J2: chained equi-joins up a hierarchy; nation/region broadcast
     (the reference's 5-way time-hierarchy assembly shape).
 
-    Size-routed dual plan (r15, guide §3.1): when the orders AND
-    customer sides both fit a broadcast (driver-side parquet byte
-    probe vs the session's autoBroadcastJoinThreshold), the whole
-    hierarchy collapses to broadcast lookups over ONE lineitem scan
-    with a single exchange — the final partial/merge aggregate. The
+    Size-routed dual plan (r15, guide §3.1): when the pruned orders
+    AND customer projections both fit a broadcast (the optimizer's
+    size estimate, ``session.fits_broadcast``), the whole hierarchy
+    collapses to broadcast lookups over ONE lineitem scan with a
+    single exchange — the final partial/merge aggregate. The
     flat decimal sum is bit-identical to the eager two-level sum
     (decimal partials are exact), so both routes produce the same
     rows; pinned by tests over both routes and the DuckDB oracle.
     """
-    if _tables_fit_broadcast(spark, sf, "orders", "customer"):
-        return _join_multiway_broadcast(spark, sf)
+    o = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf, "customer").select("c_custkey", "c_nationkey")
+    if fits_broadcast(o, c):
+        return _join_multiway_broadcast(spark, sf, o, c)
     return _join_multiway_eager(spark, sf)
 
 
-def _join_multiway_broadcast(spark: SparkSession, sf: str) -> DataFrame:
+def _join_multiway_broadcast(
+    spark: SparkSession, sf: str, o: DataFrame, c: DataFrame
+) -> DataFrame:
     """Small route: every dimension side broadcasts, so lineitem is
     never shuffled at all — scan -> 4 broadcast hash joins -> one
-    aggregate exchange (vs the eager route's three)."""
+    aggregate exchange (vs the eager route's three). ``o`` and ``c``
+    are the pruned orders and customer projections."""
     l = load_table(spark, sf, "lineitem")
-    o = load_table(spark, sf, "orders")
-    c = load_table(spark, sf, "customer")
     n = load_table(spark, sf, "nation")
     r = load_table(spark, sf, "region")
     rev = _money("l_extendedprice") * (F.lit(1) - _money("l_discount"))
     return (
         l.select(F.col("l_orderkey"), rev.alias("_rev"))
-        .join(
-            F.broadcast(o.select("o_orderkey", "o_custkey")),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(c.select("c_custkey", "c_nationkey")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
+        .join(F.broadcast(o), F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_name", "n_name")
@@ -640,8 +577,8 @@ def _price_history(spark: SparkSession, sf: str) -> DataFrame:
 
     Single-scan explode rather than a two-branch union: the union form
     scans ``part`` once per version branch, and every consumer of this
-    table (the asof broadcast-guard count, the broadcast build, the
-    equality re-join in the pricelist rollup) multiplies that. Explode
+    table (the broadcast build and the equality re-join in the
+    pricelist rollup) multiplies that. Explode
     of a 2-element struct array emits both versions from one pass —
     same rows, same types, half the scans."""
     p = load_table(spark, sf, "part")
@@ -704,9 +641,10 @@ def asof_join_pricelist(spark: SparkSession, sf: str) -> DataFrame:
     Resolved at the ``(partkey, ship_date)`` grain, mirroring the
     oracle's CTE: lineitem pre-aggregates to per-key line counts (ONE
     map-side-combining shuffle of two narrow columns), the as-of
-    reduction runs on that small key table against the broadcast price
-    list, and the final rollup weights each resolved price by its line
-    count — the fact table is never shuffled row-wise and nothing
+    reduction runs on that small key table against the price list
+    (``asof_join_auto``: broadcast while it fits, else the union
+    engine), and the final rollup weights each resolved price by its
+    line count — the fact table is never shuffled row-wise and nothing
     fact-sized is broadcast. The previous per-row formulation shuffled
     every lineitem keyed on a synthetic row id (2.74 s at sf0.1); this
     is the shape that survives 100 TB."""
@@ -718,15 +656,13 @@ def asof_join_pricelist(spark: SparkSession, sf: str) -> DataFrame:
     per_key = l.groupBy("p_partkey", "ship_date").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    best = asof_join(
+    best = asof_join_auto(
         per_key,
         ph,
         on=["p_partkey"],
         left_ts="ship_date",
         right_ts="eff_date",
         unique_left=True,
-        # probe is cheap here: the right side is a part-table scan
-        broadcast_row_limit=50_000_000,
     )
     return best.groupBy("eff_date").agg(
         F.sum("cnt").alias("n_lines"),
@@ -5965,7 +5901,7 @@ def asof_join_forward(spark: SparkSession, sf: str) -> DataFrame:
     semantics). Same pre-aggregated (partkey, ship_date) grain and
     broadcast + ``min_by`` plan as the backward entry — only the
     inequality direction and the pick aggregate flip
-    (``asof.asof_join(direction='forward')``)."""
+    (``asof.asof_join_auto(direction='forward')``)."""
     l = load_table(spark, sf, "lineitem").select(
         F.col("l_partkey").alias("p_partkey"),
         F.col("l_shipdate").cast("date").alias("ship_date"),
@@ -5974,7 +5910,7 @@ def asof_join_forward(spark: SparkSession, sf: str) -> DataFrame:
     per_key = l.groupBy("p_partkey", "ship_date").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    best = asof_join(
+    best = asof_join_auto(
         per_key,
         ph,
         on=["p_partkey"],
@@ -5982,7 +5918,6 @@ def asof_join_forward(spark: SparkSession, sf: str) -> DataFrame:
         right_ts="eff_date",
         direction="forward",
         unique_left=True,
-        broadcast_row_limit=50_000_000,
     )
     return best.groupBy("eff_date").agg(
         F.sum("cnt").alias("n_lines"),
@@ -6030,7 +5965,7 @@ def asof_join_nearest(spark: SparkSession, sf: str) -> DataFrame:
     (the midpoint itself is a 365/365-day tie, broken backward) and
     later dates to 2000 — and unlike the directional entries NO line
     drops out: every row has a nearest version
-    (``asof.asof_join(direction='nearest')``)."""
+    (``asof.asof_join_auto(direction='nearest')``)."""
     l = load_table(spark, sf, "lineitem").select(
         F.col("l_partkey").alias("p_partkey"),
         F.col("l_shipdate").cast("date").alias("ship_date"),
@@ -6039,7 +5974,7 @@ def asof_join_nearest(spark: SparkSession, sf: str) -> DataFrame:
     per_key = l.groupBy("p_partkey", "ship_date").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    best = asof_join(
+    best = asof_join_auto(
         per_key,
         ph,
         on=["p_partkey"],
@@ -6047,7 +5982,6 @@ def asof_join_nearest(spark: SparkSession, sf: str) -> DataFrame:
         right_ts="eff_date",
         direction="nearest",
         unique_left=True,
-        broadcast_row_limit=50_000_000,
     )
     return best.groupBy("eff_date").agg(
         F.sum("cnt").alias("n_lines"),

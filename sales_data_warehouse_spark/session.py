@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Configs that encode *semantics* (not tuning) — always applied.
 REQUIRED_CONF = {
@@ -91,10 +91,10 @@ DEFAULT_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for the few pandas-UDF operators (multimodal, LSH).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # 10 MB default broadcast threshold is right for our dims (time=KBs,
+    # 32 MiB (Spark's default is 10 MB) covers our dims (time=KBs,
     # product=KBs, location up to ~1 MB at reference scale); AQE will
     # upgrade shuffle joins to broadcast at runtime when sides turn out
-    # small.
+    # small. The plan routers read it through fits_broadcast below.
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
     # Files: favor large scan partitions; AQE coalesces post-shuffle.
     "spark.sql.files.maxPartitionBytes": str(256 * 1024 * 1024),
@@ -105,6 +105,40 @@ DEFAULT_CONF = {
     "spark.sql.codegen.maxFields": "512",
     "spark.ui.enabled": "false",
 }
+
+#: Catalyst sizes a file scan by its (compressed) bytes on disk; the
+#: broadcast hash relation built from the same rows can be several
+#: times larger, so estimates are scaled by this before the comparison.
+BROADCAST_SIZE_MARGIN = 3
+
+
+def fits_broadcast(*dfs: DataFrame) -> bool:
+    """The one size oracle for plan routers: True when every plan's
+    optimizer estimate, times :data:`BROADCAST_SIZE_MARGIN`, is at or
+    under the session's ``spark.sql.autoBroadcastJoinThreshold``.
+
+    The estimate is the planner's own cost input
+    (``optimizedPlan().stats().sizeInBytes()``): it runs no Spark job,
+    sees column pruning, and keeps no memo, so a plan built after a
+    table is rewritten sees the new size. Broadcast disabled
+    (threshold <= 0) or any error reading the estimate returns False,
+    which picks the shuffle plan: the one that is safe at any scale.
+    Estimates of joins multiply their inputs and a plan Catalyst cannot
+    size (an RDD-backed DataFrame) reports ``Long.MaxValue``, so errors
+    also lean toward False.
+    """
+    try:
+        conf = dfs[0].sparkSession._jsparkSession.sessionState().conf()
+        threshold = conf.autoBroadcastJoinThreshold()
+        if threshold <= 0:
+            return False
+        return all(
+            int(str(df._jdf.queryExecution().optimizedPlan().stats()
+                    .sizeInBytes())) * BROADCAST_SIZE_MARGIN <= threshold
+            for df in dfs
+        )
+    except Exception:  # noqa: BLE001 — unreadable estimate: route large
+        return False
 
 
 def _resolve_conf(

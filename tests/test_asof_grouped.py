@@ -256,17 +256,23 @@ def test_tolerance_strict_semantics_pinned(spark):
 
 def test_auto_routes_by_right_side_size(spark, sides):
     """asof_join_auto: a broadcast-sized versioned side takes the
-    broadcast+max_by plan; past the row limit it falls over to the
-    pure-JVM union engine (instead of raising like asof_join's guard)
-    — with identical results either way."""
+    broadcast+max_by plan; with broadcast disabled (threshold -1) it
+    falls over to the pure-JVM union engine — with identical results
+    either way."""
     from sales_data_warehouse_spark.operators.asof import asof_join_auto
 
     l, ph = sides
     kw = dict(on=["p_partkey"], left_ts="ship_date", right_ts="eff_date")
-    small = asof_join_auto(l, ph, **kw)  # default limit: broadcast route
-    big = asof_join_auto(l, ph, broadcast_row_limit=10, **kw)  # union
+    small = asof_join_auto(l, ph, **kw)  # default threshold: broadcast
     small_plan = small._jdf.queryExecution().executedPlan().toString()
-    big_plan = big._jdf.queryExecution().executedPlan().toString()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        big = asof_join_auto(l, ph, **kw)  # union
+        big_plan = big._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
     assert "Window" not in small_plan
     assert "Window" in big_plan and "Python" not in big_plan
     assert _key_rows(small) == _key_rows(big)

@@ -152,27 +152,42 @@ def test_asof_tolerance_matches_bruteforce_oracle(
         assert rows == want, name
 
 
-def test_asof_broadcast_guard_rejects_huge_right(spark):
-    # broadcast_right=True must not silently broadcast a giant
-    # versioned side: over the row guard it raises and points at the
-    # cogrouped path instead of OOMing the driver.
-    import pytest
+def test_asof_auto_routes_huge_right_to_union(spark):
+    # asof_join_auto must not broadcast a versioned side past the
+    # threshold: the decompression margin applies, so a side whose raw
+    # estimate fits but whose margined estimate does not takes the
+    # union engine, with the broadcast plan's rows
+    from sales_data_warehouse_spark.operators.asof import asof_join_auto
+    from sales_data_warehouse_spark.session import BROADCAST_SIZE_MARGIN
 
-    left = spark.createDataFrame([(1, 1)], "key int, ts int")
+    left = spark.createDataFrame([(1, 1), (3, 250)], "key int, ts int")
     right = spark.range(0, 500).selectExpr(
         "CAST(id % 5 AS INT) AS key", "CAST(id AS INT) AS vts"
     )
-    with pytest.raises(ValueError, match="broadcast guard"):
-        asof_join(
-            left, right, on=["key"], left_ts="ts", right_ts="vts",
-            broadcast_row_limit=100,
-        )
-    # under the guard it works as before
-    out = asof_join(
-        left, right, on=["key"], left_ts="ts", right_ts="vts",
-        broadcast_row_limit=1000,
-    )
-    assert out.count() == 1
+    est = int(str(right._jdf.queryExecution().optimizedPlan().stats()
+                  .sizeInBytes()))
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    kw = dict(on=["key"], left_ts="ts", right_ts="vts")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(est * BROADCAST_SIZE_MARGIN - 1))
+        over = asof_join_auto(left, right, **kw)
+        p_over = plan(over)
+        spark.conf.set(key, str(est * BROADCAST_SIZE_MARGIN))
+        under = asof_join_auto(left, right, **kw)
+        p_under = plan(under)
+    finally:
+        spark.conf.set(key, old)
+    assert "Window" in p_over and "Join" not in p_over
+    assert "Join" in p_under and "Window" not in p_under
+    truth = sorted(map(tuple, asof_join(left, right, **kw).collect()))
+    assert len(truth) == 2
+    for df in (over, under):
+        assert sorted(map(tuple, df.collect())) == truth
 
 
 def test_asof_unique_left_groups_by_real_keys(spark):

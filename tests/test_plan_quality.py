@@ -6,6 +6,9 @@ cartesian products."""
 
 from __future__ import annotations
 
+import contextlib
+import re
+
 import pytest
 
 from sales_data_warehouse_spark.plans import (
@@ -16,8 +19,29 @@ from sales_data_warehouse_spark.plans import (
     scan_columns,
 )
 from sales_data_warehouse_spark.queries.corpus import QUERIES
+from sales_data_warehouse_spark.session import (
+    BROADCAST_SIZE_MARGIN,
+    fits_broadcast,
+)
 
 SF_DIR = "/root/testdata/sf0.01"
+
+
+def _size_estimate(df) -> int:
+    """The optimizer's size estimate fits_broadcast compares."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    return int(str(stats.sizeInBytes()))
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value: str):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 #: Queries whose plans legitimately contain a cartesian/nested-loop join:
 #: explicit dense-cube cross joins, the as-of non-equi join, and the
@@ -165,7 +189,35 @@ def test_decontaminate_broadcasts_benchmark_side(spark):
     # definition; the overlap join must broadcast it so the training
     # side never shuffles.
     plan = _lib_executed_plan(QUERIES["decontaminate_ngrams"](spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan, plan[:2000]
+    final = plan.split("== Initial Plan ==")[0]
+    assert re.search(
+        r"BroadcastHashJoin \[shingle#\d+\], \[shingle#\d+\], Inner, "
+        r"BuildRight", final
+    ), final[:3000]
+    # the broadcast build side is the distinct shingle set itself
+    assert re.search(
+        r"BroadcastExchange HashedRelationBroadcastMode\(List\(input\[0, "
+        r"string[^\n]*\n[^\n]*HashAggregate\(keys=\[shingle#\d+\], "
+        r"functions=\[\]",
+        final,
+    ), final[:3000]
+
+
+def test_decontaminate_large_route_never_broadcasts(spark):
+    # past the broadcast threshold the shingle set is no longer forced
+    # into a broadcast (and the planner picks none either); the flagged
+    # rows are the same on both routes
+    def run():
+        df = QUERIES["decontaminate_ngrams"](spark, SF_DIR)
+        return sorted(map(tuple, df.collect())), df
+
+    small_rows, _ = run()
+    with _broadcast_threshold(spark, "1"):
+        large_rows, large = run()
+    # after the collect: AQE's final plan and the initial plan
+    plan = large._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan, plan[:3000]
+    assert large_rows == small_rows
 
 
 def test_rolling_range_window_single_sort(spark):
@@ -230,37 +282,134 @@ def test_join_multiway_large_route_eager_aggregation(spark):
 
 
 def test_join_multiway_router_is_scale_safe(spark):
-    # broadcast disabled (threshold -1) or an unreadable side must route
-    # to the shuffle plan — at 100 TB the large route is the one that
-    # must never be mis-picked
-    from sales_data_warehouse_spark.queries.corpus import (
-        _parse_size_bytes,
-        _tables_fit_broadcast,
+    # the router reads the pruned orders/customer projections through
+    # fits_broadcast: at or under the threshold (after the margin) the
+    # broadcast route, one byte over it, broadcast disabled (-1), or an
+    # unreadable estimate the eager route; the rows never change
+    from sales_data_warehouse_spark.queries.corpus import load_table
+
+    o = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, SF_DIR, "customer").select(
+        "c_custkey", "c_nationkey"
     )
+    edge = max(_size_estimate(o), _size_estimate(c)) * BROADCAST_SIZE_MARGIN
 
-    assert _parse_size_bytes("33554432") == 32 * 1024**2
-    assert _parse_size_bytes("32m") == 32 * 1024**2
-    assert _parse_size_bytes("1GB") == 1024**3
-    assert _parse_size_bytes("10k") == 10 * 1024
-    assert _parse_size_bytes("-1") == -1
-    assert _parse_size_bytes("junk") == -1
-
-    assert _tables_fit_broadcast(spark, SF_DIR, "orders", "customer")
-    assert not _tables_fit_broadcast(spark, SF_DIR, "no_such_table")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert not _tables_fit_broadcast(spark, SF_DIR, "orders")
-        # a threshold below the table's bytes routes large too
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
-        from sales_data_warehouse_spark.queries.corpus import (
-            _TABLE_BYTES_CACHE,
+    def route():
+        df = QUERIES["join_multiway"](spark, SF_DIR)
+        eager = "HashAggregate(keys=[l_orderkey" in _lib_executed_plan(
+            df, finalize=False
+        )
+        return ("eager" if eager else "broadcast"), sorted(
+            map(tuple, df.collect())
         )
 
-        _TABLE_BYTES_CACHE.clear()
-        assert not _tables_fit_broadcast(spark, SF_DIR, "orders")
+    got = {}
+    for threshold in (str(edge), str(edge - 1), "-1"):
+        with _broadcast_threshold(spark, threshold):
+            assert fits_broadcast(o, c) == (threshold == str(edge))
+            got[threshold] = route()
+    assert got[str(edge)][0] == "broadcast"
+    assert got[str(edge - 1)][0] == got["-1"][0] == "eager"
+    assert got[str(edge)][1] == got[str(edge - 1)][1] == got["-1"][1]
+
+
+def test_fits_broadcast_fails_to_the_large_plan(spark, monkeypatch):
+    # broadcast disabled or any error reading the estimate answers
+    # False, which every router maps to its shuffle plan
+    df = spark.range(10)
+    assert fits_broadcast(df)
+    with _broadcast_threshold(spark, "-1"):
+        assert not fits_broadcast(df)
+
+    class _NoPlan:
+        def queryExecution(self):
+            raise RuntimeError("no plan statistics")
+
+    broken = spark.range(10)
+    monkeypatch.setattr(broken, "_jdf", _NoPlan())
+    assert not fits_broadcast(broken)
+    assert not fits_broadcast(df, broken)
+
+
+def test_join_multiway_routes_on_the_rewritten_table(spark, tmp_path):
+    # no size memo: after orders is rewritten past the threshold (and
+    # the table cache cleared, as load_table requires) the next build
+    # routes eager; a byte memo kept from the first build would keep
+    # the broadcast route
+    from sales_data_warehouse_spark.queries.corpus import (
+        clear_table_cache,
+        load_table,
+    )
+
+    sf = str(tmp_path)
+    tables = {
+        "lineitem": (
+            "id % 40 AS l_orderkey",
+            "CAST(id AS DECIMAL(12,2)) AS l_extendedprice",
+            "CAST(0.05 AS DECIMAL(12,2)) AS l_discount",
+        ),
+        "customer": ("id AS c_custkey", "id % 5 AS c_nationkey"),
+        "nation": (
+            "id AS n_nationkey",
+            "id % 2 AS n_regionkey",
+            "CONCAT('n', id) AS n_name",
+        ),
+        "region": ("id AS r_regionkey", "CONCAT('r', id) AS r_name"),
+    }
+    rows = {"lineitem": 200, "customer": 20, "nation": 5, "region": 2}
+    for name, cols in tables.items():
+        spark.range(rows[name]).selectExpr(*cols).write.parquet(
+            f"{sf}/{name}.parquet"
+        )
+
+    def write_orders(n):
+        spark.range(n).selectExpr(
+            "id AS o_orderkey", "id % 20 AS o_custkey"
+        ).write.mode("overwrite").parquet(f"{sf}/orders.parquet")
+        clear_table_cache()
+
+    def route():
+        plan = _lib_executed_plan(
+            QUERIES["join_multiway"](spark, sf), finalize=False
+        )
+        return "eager" if "HashAggregate(keys=[l_orderkey" in plan else (
+            "broadcast"
+        )
+
+    write_orders(40)
+    try:
+        with _broadcast_threshold(spark, str(64 * 1024)):
+            assert route() == "broadcast"
+            write_orders(100_000)
+            orders = load_table(spark, sf, "orders").select(
+                "o_orderkey", "o_custkey"
+            )
+            assert _size_estimate(orders) * BROADCAST_SIZE_MARGIN > 64 * 1024
+            assert route() == "eager"
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        clear_table_cache()
+
+
+def test_size_routed_queries_submit_no_job_to_route(spark):
+    # the routers read plan statistics only: building the routed
+    # queries (tables already loaded) submits no Spark job
+    from sales_data_warehouse_spark.queries.corpus import load_table
+
+    for name in ("lineitem", "part", "orders", "customer", "nation",
+                 "region", "documents"):
+        load_table(spark, SF_DIR, name)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    sc.setJobGroup("route", "plan build only")
+    try:
+        for q in ("asof_join_pricelist", "asof_join_forward",
+                  "asof_join_nearest", "join_multiway",
+                  "decontaminate_ngrams"):
+            QUERIES[q](spark, SF_DIR)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("route") == []
 
 
 def test_composite_key_join_never_broadcasts_the_fact(spark):

@@ -120,28 +120,37 @@ def test_asof_decimal_integral_keys_exact(spark, engine):
 
 
 def test_asof_auto_routes_union_past_broadcast_limit(spark):
-    """r7 VERDICT #9: pin the router's decision at the boundary. At or
-    under broadcast_row_limit the broadcast + max_by plan runs (a join
-    node, no Window); past it, asof_join_grouped's union engine (no
-    join node, running-last Window over the union)."""
+    """r7 VERDICT #9: pin the router's decision at the boundary. While
+    the right side's size estimate times the margin is at or under
+    spark.sql.autoBroadcastJoinThreshold the broadcast + max_by plan
+    runs (a join node, no Window); one byte past it, asof_join_grouped's
+    union engine (no join node, running-last Window over the union)."""
+    from sales_data_warehouse_spark.session import BROADCAST_SIZE_MARGIN
     left = spark.createDataFrame(
         [("k", i) for i in range(10)], "grp string, ts long"
     )
-    right = spark.createDataFrame(
-        [("k", i * 2, float(i)) for i in range(5)],
-        "grp string, rts long, price double",
+    # from range, not a Python list: an RDD-backed frame has no size
+    # estimate (Long.MaxValue) and never fits a broadcast
+    right = spark.range(5).selectExpr(
+        "'k' AS grp", "id * 2 AS rts", "CAST(id AS DOUBLE) AS price"
     )
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    under = asof.asof_join_auto(
-        left, right, ["grp"], "ts", "rts", broadcast_row_limit=5
-    )
-    over = asof.asof_join_auto(
-        left, right, ["grp"], "ts", "rts", broadcast_row_limit=4
-    )
-    p_under, p_over = plan(under), plan(over)
+    stats = right._jdf.queryExecution().optimizedPlan().stats()
+    edge = int(str(stats.sizeInBytes())) * BROADCAST_SIZE_MARGIN
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(edge))
+        under = asof.asof_join_auto(left, right, ["grp"], "ts", "rts")
+        p_under = plan(under)
+        spark.conf.set(key, str(edge - 1))
+        over = asof.asof_join_auto(left, right, ["grp"], "ts", "rts")
+        p_over = plan(over)
+    finally:
+        spark.conf.set(key, old)
     assert "Join" in p_under and "Window" not in p_under
     assert "Window" in p_over and "Join" not in p_over
     # both routes agree on the answer (and with the broadcast truth)
