@@ -22,6 +22,8 @@ import operator as pyop
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sales_data_warehouse_spark.schemas import LANDING_COLUMNS
+
 #: Columns whose NULLness rejects a row (reference Cleansing.sql:37-40).
 REQUIRED_RAW = [
     "product",
@@ -59,23 +61,14 @@ def _split_address(col: Column) -> dict[str, Column]:
     }
 
 
-def cleanse(landing: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split landing rows into (cleansed, invalid).
-
-    Returns
-    -------
-    cleansed : typed, deduplicated order lines (CLEANSED_SCHEMA)
-    invalid  : raw rejected rows + ``reject_reason``
-
-    Semantics matched to the reference:
-      * NULL in any required column -> invalid (P2, Cleansing.sql:37-40)
-      * any cast failure -> invalid (P3, Cleansing.sql:64-106); repeated
-        header rows land here ("Product" fails the qty/price/date casts)
-      * missing order_id on an otherwise-valid row -> ``max(order_id)+n``
-        (Q10, Cleansing.sql:56-61)
-      * order_date time-of-day discarded -> DateType (Q1, Cleansing.sql:78)
-      * full-row DISTINCT at the end (Q9/A5, Cleansing.sql:118-122)
-    """
+def _split_rejects(landing: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The reject rule shared by the batch and the streaming cleanse:
+    NULL in a required column -> ``null_required_field``, else any cast
+    failure -> ``cast_failure``. Returns (valid, invalid): ``valid``
+    keeps the landing columns plus the typed ``_order_id``,
+    ``_quantity``, ``_price`` and ``_ts``; ``invalid`` is the raw
+    rejected rows plus ``reject_reason``. One projection and two
+    filters, no state and no shuffle, so it runs on a stream as is."""
     null_any = functools.reduce(
         pyop.or_, (F.col(c).isNull() for c in REQUIRED_RAW)
     )
@@ -105,16 +98,29 @@ def cleanse(landing: DataFrame) -> tuple[DataFrame, DataFrame]:
     flagged = typed.withColumn("_reject", reason)
 
     invalid = flagged.filter(F.col("_reject").isNotNull()).select(
-        "order_id",
-        "product",
-        "quantity_ordered",
-        "price_each",
-        "order_date",
-        "purchase_address",
-        F.col("_reject").alias("reject_reason"),
+        *LANDING_COLUMNS, F.col("_reject").alias("reject_reason")
     )
+    return flagged.filter(F.col("_reject").isNull()), invalid
 
-    valid = flagged.filter(F.col("_reject").isNull())
+
+def cleanse(landing: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Split landing rows into (cleansed, invalid).
+
+    Returns
+    -------
+    cleansed : typed, deduplicated order lines (CLEANSED_SCHEMA)
+    invalid  : raw rejected rows + ``reject_reason``
+
+    Semantics matched to the reference:
+      * NULL in any required column -> invalid (P2, Cleansing.sql:37-40)
+      * any cast failure -> invalid (P3, Cleansing.sql:64-106); repeated
+        header rows land here ("Product" fails the qty/price/date casts)
+      * missing order_id on an otherwise-valid row -> ``max(order_id)+n``
+        (Q10, Cleansing.sql:56-61)
+      * order_date time-of-day discarded -> DateType (Q1, Cleansing.sql:78)
+      * full-row DISTINCT at the end (Q9/A5, Cleansing.sql:118-122)
+    """
+    valid, invalid = _split_rejects(landing)
 
     # Q10: rows with NULL order_id get max(order_id) + running number.
     # The scalar max broadcasts as a 1-row subplan; row_number only runs

@@ -12,11 +12,16 @@ Shape at scale: ONE job per compaction — a scan, an exchange to
 ``ceil(bytes / target)`` partitions (range exchange when sort columns
 are given: globally sorted output files with tight, non-overlapping
 min/max bounds — the same pruning contract as ``sources.zorder``, one
-dimension), and a write. The swap is rename-based via the Hadoop
-FileSystem API, so it works on any Hadoop-compatible store; the old
-data directory survives until the new one is fully written (crash
-before the swap leaves the table untouched; crash between renames is
-recoverable from ``path + '.compact_old'``).
+dimension), and a write. The swap is ``staged_overwrite``'s two
+renames via the Hadoop FileSystem API, so it works on any
+Hadoop-compatible store; the old data directory survives until the new
+one is fully written (crash before the swap leaves the table untouched;
+crash between renames is restored by ``recover_staged``).
+
+The module also holds the Hadoop FileSystem helpers the streaming
+sinks share, among them the one replay mark every marked
+``foreachBatch`` sink reads and advances (``read_mark``,
+``advance_mark``).
 """
 
 from __future__ import annotations
@@ -56,6 +61,22 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> bool:
     fs, hsrc, jvm = _hadoop_fs(spark, src)
     hdst = jvm.org.apache.hadoop.fs.Path(dst)
     return bool(fs.rename(hsrc, hdst))
+
+
+def fs_replace(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` over ``dst``, replacing it if it exists: Hadoop's
+    ``FileContext.rename`` with ``Options.Rename.OVERWRITE`` (a plain
+    :func:`fs_rename` returns False over an existing ``dst`` and keeps
+    the old file). Raises on failure."""
+    _, hsrc, jvm = _hadoop_fs(spark, src)
+    hdst = jvm.org.apache.hadoop.fs.Path(dst)
+    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        hdst.toUri(), spark._jsc.hadoopConfiguration()
+    )
+    Rename = jvm.org.apache.hadoop.fs.Options.Rename
+    opts = spark.sparkContext._gateway.new_array(Rename, 1)
+    opts[0] = Rename.OVERWRITE
+    fc.rename(hsrc, hdst, opts)
 
 
 def fs_mkdirs(spark: SparkSession, path: str) -> bool:
@@ -102,6 +123,30 @@ def fs_read_text(spark: SparkSession, path: str) -> str | None:
         return "" if line is None else str(line)
     finally:
         stream.close()
+
+
+def read_mark(spark: SparkSession, path: str) -> int | None:
+    """A ``foreachBatch`` sink's replay high-water mark: the id of the
+    last batch whose output committed, or ``None`` when the mark is
+    missing or does not parse (the sink then treats the batch as not
+    yet committed)."""
+    try:
+        return int(fs_read_text(spark, path))
+    except (TypeError, ValueError):
+        return None
+
+
+def advance_mark(spark: SparkSession, path: str, batch_id: int) -> None:
+    """Advance a replay mark to ``batch_id`` once the batch's output has
+    committed: write ``path + '.tmp'``, then rename it over the mark
+    (:func:`fs_replace`). A reader sees the mark absent, old or
+    complete, never torn; a crash before the rename leaves the old
+    mark and a stale ``.tmp`` that the next advance overwrites. A
+    crash between the output commit and this call leaves the old mark,
+    so the batch replays; each sink documents what that replay does."""
+    tmp = path + ".tmp"
+    fs_write_text(spark, tmp, str(batch_id))
+    fs_replace(spark, tmp, path)
 
 
 def enforce_output_lineage(
@@ -329,10 +374,10 @@ def compact_table(
     within files so every output file covers a tight, non-overlapping
     key range (footer min/max pruning).
 
-    The rewrite lands in ``path + '.compact_tmp'`` and is swapped in by
-    two renames — the source is never overwritten while a plan still
-    reads it, and a crash mid-way leaves either the old table intact or
-    both directories present for manual recovery.
+    The rewrite is swapped in by :func:`staged_overwrite`: the source
+    is never overwritten while a plan still reads it, and a crash
+    between its two renames is restored by :func:`recover_staged`,
+    which runs first here.
 
     Hive-partitioned tables (``key=value`` subdirectories, e.g. the
     month-partitioned fact) are REFUSED at the root: reading the root
@@ -341,6 +386,7 @@ def compact_table(
     Compact each partition subdirectory instead — which is also the
     natural maintenance unit (only active partitions accrete files).
     """
+    recover_staged(spark, path)
     fs, hpath, _ = _hadoop_fs(spark, path)
     part_dirs = [
         st.getPath().getName()
@@ -363,23 +409,7 @@ def compact_table(
         )
     else:
         out = df.repartition(n_files)
-
-    tmp = path + ".compact_tmp"
-    old = path + ".compact_old"
-    out.write.mode("overwrite").parquet(tmp)
-
-    jvm = spark._jvm
-    jsc = spark._jsc
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(jsc.hadoopConfiguration())
-    fs.delete(P(old), True)
-    if not fs.rename(P(path), P(old)):
-        raise IOError(f"compact_table: could not stage {path} -> {old}")
-    if not fs.rename(P(tmp), P(path)):
-        # roll back: restore the original directory
-        fs.rename(P(old), P(path))
-        raise IOError(f"compact_table: could not swap {tmp} -> {path}")
-    fs.delete(P(old), True)
+    staged_overwrite(spark, out, path)
     return n_files
 
 

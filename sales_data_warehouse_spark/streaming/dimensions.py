@@ -102,6 +102,30 @@ def merge_dimensions_batch(
     return merged
 
 
+def _cleanse_and_merge(
+    spark: SparkSession, batch_df: DataFrame, batch_id: int,
+    warehouse_dir: str,
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """The body both dimension sinks share: cleanse one landing
+    micro-batch, land cleansed/invalid, and fold the batch into the
+    three dimensions; returns the cleansed batch and the merged
+    dimensions. The batch cleanse is computed once (``localCheckpoint``)
+    for the parquet write AND the three merges. Each batch owns a
+    ``batch_id=N`` partition and OVERWRITES it, so a replayed
+    micro-batch rewrites its own partition instead of appending
+    duplicates; readers scan the parent dir (batch_id shows up as a
+    partition column)."""
+    cleansed, invalid = cleanse_stream(batch_df)
+    cleansed = cleansed.drop("order_ts").localCheckpoint()
+    cleansed.write.mode("overwrite").parquet(
+        f"{warehouse_dir}/cleansed/batch_id={batch_id}"
+    )
+    invalid.write.mode("overwrite").parquet(
+        f"{warehouse_dir}/invalid/batch_id={batch_id}"
+    )
+    return cleansed, merge_dimensions_batch(spark, cleansed, warehouse_dir)
+
+
 def start_streaming_dimensions(
     spark: SparkSession,
     drop_dir: str,
@@ -123,21 +147,7 @@ def start_streaming_dimensions(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        cleansed, invalid = cleanse_stream(batch_df)
-        # one computation of the batch cleanse feeds the parquet write
-        # AND the three merges. Each batch owns a batch_id=N partition
-        # and OVERWRITES it, so a replayed micro-batch (crash between
-        # the write and the checkpoint commit) rewrites its own
-        # partition instead of appending duplicates; readers scan the
-        # parent dir (batch_id shows up as a partition column).
-        cleansed = cleansed.drop("order_ts").localCheckpoint()
-        cleansed.write.mode("overwrite").parquet(
-            f"{warehouse_dir}/cleansed/batch_id={batch_id}"
-        )
-        invalid.write.mode("overwrite").parquet(
-            f"{warehouse_dir}/invalid/batch_id={batch_id}"
-        )
-        merge_dimensions_batch(spark, cleansed, warehouse_dir)
+        _cleanse_and_merge(spark, batch_df, batch_id, warehouse_dir)
 
     landing = read_sales_csv_stream(spark, drop_dir)
     writer = landing.writeStream.foreachBatch(sink).option(
@@ -179,15 +189,9 @@ def start_streaming_warehouse(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        cleansed, invalid = cleanse_stream(batch_df)
-        cleansed = cleansed.drop("order_ts").localCheckpoint()
-        cleansed.write.mode("overwrite").parquet(
-            f"{warehouse_dir}/cleansed/batch_id={batch_id}"
+        cleansed, dims = _cleanse_and_merge(
+            spark, batch_df, batch_id, warehouse_dir
         )
-        invalid.write.mode("overwrite").parquet(
-            f"{warehouse_dir}/invalid/batch_id={batch_id}"
-        )
-        dims = merge_dimensions_batch(spark, cleansed, warehouse_dir)
         fact = build_fact(
             cleansed,
             dims["product_dimension"],

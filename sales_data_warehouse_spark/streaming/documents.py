@@ -10,34 +10,25 @@ table; admitted history is never re-read or re-hashed.
 Replay safety follows the module conventions (see
 ``streaming/dimensions.py``): admitted docs land in a ``batch_id=N``
 directory with per-batch overwrite; the fingerprint state is
-APPEND-ONLY (late r14) — each fold writes only its batch's fresh
-fingerprints as their own ``fingerprints/fp/batch_id=N`` partition,
-AFTER the admitted write, then advances the ``_last_batch`` high-water
-mark. Prior state is always read partition-pruned to ``<= mark``, so
-an uncommitted or ahead-of-mark partition is invisible; a replayed
-batch either recomputes identically (crash before the mark advanced)
-or is skipped by an O(1) mark comparison (crash after — the one case
-where recomputing would wrongly admit nothing and overwrite the
-batch's output with an empty directory). The full crash-window
-walkthrough lives on ``dedup_documents_batch``. The previous designs
-migrate on first contact: the r14 staged-swap layout by pure rename,
-the pre-r14 flat layout via a one-time state-sized containment check.
+APPEND-ONLY — each fold writes only its batch's fresh fingerprints as
+their own ``fingerprints/fp/batch_id=N`` partition, AFTER the admitted
+write, then advances the ``_last_batch`` high-water mark with
+``compaction.advance_mark``. Prior state is always read
+partition-pruned to ``<= mark``, so an uncommitted or ahead-of-mark
+partition is invisible; a replayed batch either recomputes identically
+(crash before the mark advanced) or is skipped by an O(1) mark
+comparison (crash after — the one case where recomputing would wrongly
+admit nothing and overwrite the batch's output with an empty
+directory). The full crash-window walkthrough lives on
+``dedup_documents_batch``.
 
-Why append-only: the staged-swap design rewrote the ENTIRE fingerprint
-union every fold — O(state) writes per micro-batch, which at 100 TB
-(|distinct texts| rows) dwarfs the O(batch) work the fold actually
-does. The swap bought atomicity for the mark; partition pruning plus
-the per-partition ``_SUCCESS`` job-commit markers buy the same
-guarantees at delta cost. ``compact_dedup_state`` bounds the partition
-count when triggers accumulate; correctness never depends on it.
-
-One inherited caveat (``staged_overwrite``, see its docstring): a
-pre-append state that crashed INSIDE its two-rename swap window sits
-at ``<path>.stage_old`` with the live path absent. Treating that as
-"no state yet" would rebuild from nothing — every fold still calls
-``compaction.recover_staged`` before reading (the r11 lesson from the
-weighted-reservoir fold), then finishes any half-done compaction or
-layout migration the same way.
+Why append-only: a state rewritten whole every fold costs O(state)
+writes per micro-batch, which at 100 TB (|distinct texts| rows) dwarfs
+the O(batch) work the fold actually does. Partition pruning plus the
+per-partition ``_SUCCESS`` job-commit markers give the same guarantees
+at delta cost. ``compact_dedup_state`` bounds the partition count when
+triggers accumulate; correctness never depends on it, and every fold
+and read first finishes a compaction that crashed mid-commit.
 """
 
 from __future__ import annotations
@@ -50,15 +41,14 @@ from sales_data_warehouse_spark.operators.dedup import (
     incremental_exact_dedup,
 )
 from sales_data_warehouse_spark.sources.compaction import (
+    advance_mark,
     enforce_output_lineage,
     fs_delete,
     fs_exists,
     fs_ls,
     fs_mkdirs,
-    fs_read_text,
     fs_rename,
-    fs_write_text,
-    recover_staged,
+    read_mark,
 )
 
 #: documents-table schema (streaming sources need it declared).
@@ -106,99 +96,93 @@ def _must_rename(spark: SparkSession, src: str, dst: str) -> None:
         )
 
 
-def _committed_batches(spark: SparkSession, fp_dir: str) -> list[int]:
-    """batch ids of fully-written state partitions — those whose
-    directory carries the ``_SUCCESS`` job-commit marker. A partition
-    WITHOUT it is a crashed in-flight write and must not count."""
+def _committed_batches(spark: SparkSession, part_dir: str) -> list[int]:
+    """batch ids of fully-written ``batch_id=N`` state partitions —
+    those whose directory carries the ``_SUCCESS`` job-commit marker. A
+    partition WITHOUT it is a crashed in-flight write and must not
+    count."""
     out = []
-    for name in fs_ls(spark, fp_dir):
+    for name in fs_ls(spark, part_dir):
         if not name.startswith("batch_id="):
             continue
         try:
             b = int(name.split("=", 1)[1])
         except ValueError:
             continue
-        if fs_exists(spark, f"{fp_dir}/{name}/_SUCCESS"):
+        if fs_exists(spark, f"{part_dir}/{name}/_SUCCESS"):
             out.append(b)
     return sorted(out)
 
 
+def _finish_compaction(
+    spark: SparkSession, part_dir: str, tmp: str, last: int, target: int
+) -> None:
+    """Commit a staged compaction: ``tmp`` holds the union of every
+    committed partition with id <= ``last``; delete those partitions
+    and rename ``tmp`` into ``batch_id=<target>``. The staged table
+    survives until the final rename, so a crash anywhere in here is
+    finished by calling this again with the same arguments."""
+    for b in _committed_batches(spark, part_dir):
+        if b <= last:
+            fs_delete(spark, f"{part_dir}/batch_id={b}")
+    fs_mkdirs(spark, part_dir)
+    _must_rename(spark, tmp, f"{part_dir}/batch_id={target}")
+
+
+def _compact_partitions(
+    spark: SparkSession, part_dir: str, tmp: str, last: int, target: int
+) -> int:
+    """Merge every committed partition with id <= ``last`` into
+    ``batch_id=<target>`` and return how many were merged (nothing is
+    rewritten for one or none). The union is written fully to ``tmp``
+    before anything is deleted, then :func:`_finish_compaction`
+    commits it. Must not run concurrently with a fold."""
+    sources = [b for b in _committed_batches(spark, part_dir) if b <= last]
+    if len(sources) <= 1:
+        return len(sources)
+    (
+        spark.read.parquet(part_dir)
+        .filter(F.col("batch_id") <= last)
+        .drop("batch_id")
+        .write.mode("overwrite")
+        .parquet(tmp)
+    )
+    _finish_compaction(spark, part_dir, tmp, last, target)
+    return len(sources)
+
+
 def _state_mark(spark: SparkSession, state_path: str) -> int | None:
     """The state's high-water mark: every batch with id <= mark is
-    fully folded. The ``_last_batch`` file is the O(1) fast path; a
-    missing or torn file (its write is a plain overwrite, NOT atomic)
-    falls back to the authoritative scan of partition ``_SUCCESS``
-    markers — each partition's job commit IS atomic, so the max
-    committed partition id is exactly the mark the torn file would
-    have recorded."""
-    mark = fs_read_text(spark, f"{state_path}/_last_batch")
+    fully folded. The ``_last_batch`` mark is the O(1) fast path; a
+    missing or unparsable mark falls back to the authoritative scan of
+    partition ``_SUCCESS`` markers — each partition's job commit IS
+    atomic, so the max committed partition id is exactly the mark."""
+    mark = read_mark(spark, f"{state_path}/_last_batch")
     if mark is not None:
-        try:
-            return int(mark)
-        except ValueError:
-            pass
+        return mark
     done = _committed_batches(spark, f"{state_path}/fp")
     return done[-1] if done else None
 
 
 def _recover_fp_compaction(spark: SparkSession, state_path: str) -> None:
-    """Finish a :func:`compact_dedup_state` that crashed mid-commit:
-    the staged combined table (``fp_compact_tmp_<M>``, full state
-    <= M) survives until the commit completes, so recovery deletes any
-    remaining source partitions <= M and renames the staged table into
-    ``fp/batch_id=<M>``. Idempotent; called before every state read."""
+    """Finish a :func:`compact_dedup_state` that crashed mid-commit
+    (the staged ``fp_compact_tmp_<M>`` holds the full state <= M).
+    Idempotent; called before every state read."""
     for name in fs_ls(spark, state_path):
-        if not name.startswith("fp_compact_tmp_"):
-            continue
-        m = int(name.rsplit("_", 1)[1])
-        fp_dir = f"{state_path}/fp"
-        for b in _committed_batches(spark, fp_dir):
-            if b <= m:
-                fs_delete(spark, f"{fp_dir}/batch_id={b}")
-        fs_mkdirs(spark, fp_dir)
-        _must_rename(
-            spark, f"{state_path}/{name}", f"{fp_dir}/batch_id={m}"
-        )
-
-
-def _migrate_v2_state(spark: SparkSession, state_path: str) -> None:
-    """One-time layout migration for an r14-early state (``fp`` holding
-    a flat staged-swap generation + an atomic ``_last_batch`` mark):
-    move the flat table under ``fp/batch_id=<mark>`` so it becomes the
-    first partition of the append-only layout. Pure renames — O(1) in
-    state size. Crash-resumable: the half-moved table waits under
-    ``fp.v2mig`` and is finished before any read."""
-    fp_dir = f"{state_path}/fp"
-    mig = f"{state_path}/fp.v2mig"
-    if not fs_exists(spark, mig):
-        if not fs_exists(spark, fp_dir):
-            return
-        if any(
-            n.startswith("batch_id=") for n in fs_ls(spark, fp_dir)
-        ):
-            return  # already the append layout
-        _must_rename(spark, fp_dir, mig)
-    mark = fs_read_text(spark, f"{state_path}/_last_batch")
-    if mark is None:
-        raise IOError(
-            f"dedup state migration: {mig} exists but "
-            f"{state_path}/_last_batch is missing — the v2 layout "
-            "always carried the mark. Restore the mark file (or "
-            f"rename {mig} back to {fp_dir}) before restarting."
-        )
-    fs_mkdirs(spark, fp_dir)
-    _must_rename(spark, mig, f"{fp_dir}/batch_id={int(mark)}")
+        if name.startswith("fp_compact_tmp_"):
+            m = int(name.rsplit("_", 1)[1])
+            _finish_compaction(
+                spark, f"{state_path}/fp", f"{state_path}/{name}", m, m
+            )
 
 
 def read_dedup_state(spark: SparkSession, output_dir: str) -> DataFrame:
     """The streaming exact-dedup sink's fingerprint state as one
     DataFrame (fp, canonical_id, n_copies) — the union of the
     append-only ``fingerprints/fp/batch_id=N`` partitions, recovered
-    and migrated first so readers never see a half-committed layout."""
+    first so readers never see a half-committed compaction."""
     state_path = f"{output_dir}/fingerprints"
-    recover_staged(spark, state_path)
     _recover_fp_compaction(spark, state_path)
-    _migrate_v2_state(spark, state_path)
     return spark.read.parquet(f"{state_path}/fp").drop("batch_id")
 
 
@@ -219,28 +203,17 @@ def compact_dedup_state(spark: SparkSession, output_dir: str) -> int:
     ``_recover_fp_compaction`` before the next fold or read. Must not
     run concurrently with a fold."""
     state_path = f"{output_dir}/fingerprints"
-    recover_staged(spark, state_path)
     _recover_fp_compaction(spark, state_path)
-    _migrate_v2_state(spark, state_path)
-    fp_dir = f"{state_path}/fp"
     mark = _state_mark(spark, state_path)
     if mark is None:
         return 0
-    parts = [b for b in _committed_batches(spark, fp_dir) if b <= mark]
-    if len(parts) <= 1:
-        return len(parts)
-    tmp = f"{state_path}/fp_compact_tmp_{mark}"
-    (
-        spark.read.parquet(fp_dir)
-        .filter(F.col("batch_id") <= mark)
-        .drop("batch_id")
-        .write.mode("overwrite")
-        .parquet(tmp)
+    return _compact_partitions(
+        spark,
+        f"{state_path}/fp",
+        f"{state_path}/fp_compact_tmp_{mark}",
+        mark,
+        mark,
     )
-    for b in parts:
-        fs_delete(spark, f"{fp_dir}/batch_id={b}")
-    _must_rename(spark, tmp, f"{fp_dir}/batch_id={mark}")
-    return len(parts)
 
 
 def dedup_documents_batch(
@@ -271,39 +244,28 @@ def dedup_documents_batch(
       batch replays and overwrites it;
     * replay detection is the O(1) ``mark >= batch_id`` comparison
       (plus the admitted-output existence check), exactly as before;
-    * the mark file's own write is a plain overwrite, NOT atomic — a
-      torn mark falls back to the authoritative max-committed-partition
-      scan (``_SUCCESS`` job markers, which ARE atomic), see
-      :func:`_state_mark`.
+    * the mark advances through ``compaction.advance_mark`` (a
+      temp-file write renamed over the mark), so it reads absent, old
+      or complete; absent or unparsable falls back to the
+      authoritative max-committed-partition scan (``_SUCCESS`` job
+      markers), see :func:`_state_mark`.
 
     Crash windows, end to end: before the admitted write — replay
     recomputes identically; between admitted and state-partition
     writes — mark unchanged, replay recomputes identically and
     overwrites both; mid-partition-write — partition uncommitted (no
     ``_SUCCESS``) and above the mark, replay overwrites it; between
-    partition write and mark write — replay recomputes against
+    partition write and mark advance — replay recomputes against
     ``<= mark`` (its own committed partition excluded by pruning) and
-    overwrites idempotently; mark torn — the ``_SUCCESS`` fallback
-    reads the same value; after the mark — O(1) skip, protecting the
+    overwrites idempotently; after the mark — O(1) skip, protecting the
     admitted output from the empty-recompute clobber the detection
-    exists for.
-
-    Legacy layouts migrate on first contact: the r14 staged-swap
-    layout by pure rename into ``batch_id=<mark>``
-    (:func:`_migrate_v2_state`, O(1)); the pre-r14 flat layout (no
-    mark at all) via the old state-sized containment check once, after
-    which its union is written as the first partition and the mark
-    takes over for good."""
+    exists for."""
     admitted_path = f"{output_dir}/admitted/batch_id={batch_id}"
     state_path = f"{output_dir}/fingerprints"
     fp_dir = f"{state_path}/fp"
 
-    # restore any half-committed state first: a mid-swap v2 crash, a
-    # mid-commit compaction, a half-migrated v2 layout
-    recover_staged(spark, state_path)
     _recover_fp_compaction(spark, state_path)
-    _migrate_v2_state(spark, state_path)
-
+    prior = None
     if fs_exists(spark, fp_dir):
         mark = _state_mark(spark, state_path)
         if (
@@ -312,39 +274,12 @@ def dedup_documents_batch(
             and fs_exists(spark, admitted_path)
         ):
             return  # state already contains this batch: O(1) skip
-        prior = (
-            spark.read.parquet(fp_dir)
-            .filter(F.col("batch_id") <= mark)
-            .drop("batch_id")
-            if mark is not None
-            else None
-        )
-    elif fs_exists(spark, state_path):
-        # pre-r14 flat layout (fingerprint parquet directly under the
-        # state path, no high-water mark): one state-sized containment
-        # check, then migrate by writing the union as the first
-        # partition of the append layout
-        prior = spark.read.parquet(state_path)
-        if fs_exists(spark, admitted_path):
-            batch_fps = batch_df.select(
-                F.md5(F.col("text")).alias("fp")
-            ).distinct()
-            if batch_fps.join(prior, "fp", "left_anti").count() == 0:
-                return
-        fresh, union = incremental_exact_dedup(batch_df, prior)
-        fresh.write.mode("overwrite").parquet(admitted_path)
-        union.write.mode("overwrite").parquet(
-            f"{fp_dir}/batch_id={batch_id}"
-        )
-        fs_write_text(spark, f"{state_path}/_last_batch", str(batch_id))
-        # drop the superseded v1 files (loose parquet at the state
-        # root; the fp/ subdir and mark stay)
-        for name in fs_ls(spark, state_path):
-            if name not in ("fp", "_last_batch"):
-                fs_delete(spark, f"{state_path}/{name}")
-        return
-    else:
-        prior = None
+        if mark is not None:
+            prior = (
+                spark.read.parquet(fp_dir)
+                .filter(F.col("batch_id") <= mark)
+                .drop("batch_id")
+            )
     # materialize: the admitted write and the delta write both embed
     # the fresh-fingerprint anti-join — without the checkpoint each
     # fold scans the state TWICE (operator docstring)
@@ -353,7 +288,7 @@ def dedup_documents_batch(
     )
     fresh.write.mode("overwrite").parquet(admitted_path)
     delta.write.mode("overwrite").parquet(f"{fp_dir}/batch_id={batch_id}")
-    fs_write_text(spark, f"{state_path}/_last_batch", str(batch_id))
+    advance_mark(spark, f"{state_path}/_last_batch", batch_id)
 
 
 def start_streaming_doc_dedup(
@@ -396,45 +331,22 @@ def start_streaming_doc_dedup(
     return writer.start()
 
 
-def _committed_band_batches(
-    spark: SparkSession, state_path: str
-) -> list[int]:
-    """Committed band-state partition ids (``_SUCCESS`` present) —
-    same authority rule as the fingerprint state's scan."""
-    out = []
-    for name in fs_ls(spark, state_path):
-        if not name.startswith("batch_id="):
-            continue
-        try:
-            b = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if fs_exists(spark, f"{state_path}/batch_id={b}/_SUCCESS"):
-            out.append(b)
-    return sorted(out)
-
-
 def _recover_band_compaction(
     spark: SparkSession, output_dir: str
 ) -> None:
-    """Finish a :func:`compact_band_state` that crashed mid-commit:
-    the staged merge (``band_compact_tmp_<top>``, the union of every
-    partition BELOW top) survives until the commit completes, so
-    recovery deletes any remaining committed partitions < top and
-    renames the staged table into ``batch_id=-1``. Idempotent; runs
-    before every fold."""
-    state_path = f"{output_dir}/band_state"
+    """Finish a :func:`compact_band_state` that crashed mid-commit (the
+    staged ``band_compact_tmp_<top>`` holds the union of every
+    partition BELOW top). Idempotent; runs before every fold."""
     for name in fs_ls(spark, output_dir):
-        if not name.startswith("band_compact_tmp_"):
-            continue
-        top = int(name.rsplit("_", 1)[1])
-        for b in _committed_band_batches(spark, state_path):
-            if b < top:
-                fs_delete(spark, f"{state_path}/batch_id={b}")
-        fs_mkdirs(spark, state_path)
-        _must_rename(
-            spark, f"{output_dir}/{name}", f"{state_path}/batch_id=-1"
-        )
+        if name.startswith("band_compact_tmp_"):
+            top = int(name.rsplit("_", 1)[1])
+            _finish_compaction(
+                spark,
+                f"{output_dir}/band_state",
+                f"{output_dir}/{name}",
+                top - 1,
+                -1,
+            )
 
 
 def compact_band_state(spark: SparkSession, output_dir: str) -> int:
@@ -450,62 +362,24 @@ def compact_band_state(spark: SparkSession, output_dir: str) -> int:
     :func:`compact_dedup_state`; must not run concurrently with a
     fold."""
     state_path = f"{output_dir}/band_state"
-    recover_staged(spark, state_path)
     _recover_band_compaction(spark, output_dir)
-    _migrate_band_state(spark, state_path)
-    parts = _committed_band_batches(spark, state_path)
+    parts = _committed_batches(spark, state_path)
     if not parts:
         return 0
     top = parts[-1]
-    sources = [b for b in parts if b < top]
-    if len(sources) <= 1:
-        return len(sources)
-    tmp = f"{output_dir}/band_compact_tmp_{top}"
-    (
-        spark.read.parquet(state_path)
-        .filter(F.col("batch_id") < top)
-        .drop("batch_id")
-        .write.mode("overwrite")
-        .parquet(tmp)
+    return _compact_partitions(
+        spark, state_path, f"{output_dir}/band_compact_tmp_{top}", top - 1, -1
     )
-    for b in sources:
-        fs_delete(spark, f"{state_path}/batch_id={b}")
-    _must_rename(spark, tmp, f"{state_path}/batch_id=-1")
-    return len(sources)
 
 
 def read_band_state(spark: SparkSession, output_dir: str) -> DataFrame:
     """The near-dedup sink's band state as one DataFrame (the
     :func:`~sales_data_warehouse_spark.operators.dedup.banded_signatures`
     schema) — the union of the append-only ``band_state/batch_id=N``
-    partitions, recovered and migrated first so readers never see a
-    half-committed layout (the read-side twin of
-    :func:`read_dedup_state`)."""
-    state_path = f"{output_dir}/band_state"
-    recover_staged(spark, state_path)
+    partitions, recovered first so readers never see a half-committed
+    compaction (the read-side twin of :func:`read_dedup_state`)."""
     _recover_band_compaction(spark, output_dir)
-    _migrate_band_state(spark, state_path)
-    return spark.read.parquet(state_path).drop("batch_id")
-
-
-def _migrate_band_state(spark: SparkSession, state_path: str) -> None:
-    """One-time layout migration for a pre-append band state (banded
-    rows flat under the state path, written by the old staged swap):
-    move the flat table under ``batch_id=-1`` — a reserved id below
-    every real batch — so it becomes the first partition of the
-    append-only layout. Pure renames, crash-resumable via the
-    ``.bsmig`` waypoint."""
-    mig = f"{state_path}.bsmig"
-    if not fs_exists(spark, mig):
-        if not fs_exists(spark, state_path):
-            return
-        if any(
-            n.startswith("batch_id=") for n in fs_ls(spark, state_path)
-        ):
-            return  # already the append layout
-        _must_rename(spark, state_path, mig)
-    fs_mkdirs(spark, state_path)
-    _must_rename(spark, mig, f"{state_path}/batch_id=-1")
+    return spark.read.parquet(f"{output_dir}/band_state").drop("batch_id")
 
 
 def near_dedup_documents_batch(
@@ -537,9 +411,7 @@ def near_dedup_documents_batch(
     )
 
     state_path = f"{output_dir}/band_state"
-    recover_staged(spark, state_path)
     _recover_band_compaction(spark, output_dir)
-    _migrate_band_state(spark, state_path)
     prior = (
         spark.read.parquet(state_path).drop("batch_id")
         if fs_exists(spark, state_path)

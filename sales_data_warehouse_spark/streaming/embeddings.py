@@ -13,21 +13,20 @@ warning once it crosses ``skew_warn_ratio``.
 
 Replay semantics: ``foreachBatch`` re-delivers a micro-batch whose sink
 ran but whose checkpoint commit didn't land. Appends are made
-replay-safe with a per-namespace ``_last_batch`` high-water mark
-written AFTER the append commits (late r14 — previously one marker
-directory per batch, unbounded tiny-dir accumulation; legacy markers
-are honored and retired) — a replayed batch at or below the mark is
-skipped (stats still run, they're read-only). Marks are NAMESPACED by
-a digest of the stream's checkpoint location, because ``batch_id`` is
-unique only within one checkpoint lineage — without the namespace, a
-second stream (or a fresh-checkpoint restart) feeding the same index
-would collide on ``batch_id=0, 1, ...`` and silently drop its appends.
-The unguarded window is a crash between the
-parquet commit and the mark write, in which one batch double-appends;
-IVF search tolerates duplicate vectors (same cell, same neighbor id —
-de-dup top-k by id if exact multiplicity matters) and the next rebuild
-heals the table, so the trade is documented rather than hidden behind a
-staging rename that could not be atomic across cell directories anyway.
+replay-safe with a per-namespace ``_last_batch`` high-water mark,
+advanced with ``compaction.advance_mark`` AFTER the append commits — a
+replayed batch at or below the mark is skipped (stats still run,
+they're read-only). Marks are NAMESPACED by a digest of the stream's
+checkpoint location, because ``batch_id`` is unique only within one
+checkpoint lineage — without the namespace, a second stream (or a
+fresh-checkpoint restart) feeding the same index would collide on
+``batch_id=0, 1, ...`` and silently drop its appends. The unguarded
+window is a crash between the parquet commit and the mark advance, in
+which that one batch re-appends on replay; IVF search tolerates
+duplicate vectors (same cell, same neighbor id — de-dup top-k by id if
+exact multiplicity matters) and the next rebuild heals the table, so
+the trade is documented rather than hidden behind a staging rename
+that could not be atomic across cell directories anyway.
 """
 
 from __future__ import annotations
@@ -46,11 +45,8 @@ from sales_data_warehouse_spark.operators.similarity import (
     load_ivf_index,
 )
 from sales_data_warehouse_spark.sources.compaction import (
-    fs_delete,
-    fs_exists,
-    fs_ls,
-    fs_read_text,
-    fs_write_text,
+    advance_mark,
+    read_mark,
 )
 
 #: embeddings-table schema (streaming sources need it declared).
@@ -92,11 +88,11 @@ def ivf_append_batch(
     monitor is one groupBy over the WHOLE assigned table, so callers
     on a hot path throttle it; see ``stats_every_n_batches``). Plain
     function (the ``foreachBatch`` sink calls it) so replay semantics
-    are directly testable without driving a stream: a batch whose
-    marker directory exists already committed — skip the append,
-    still report stats.
+    are directly testable without driving a stream: a batch at or
+    below the mark already committed — skip the append, still report
+    stats.
 
-    ``marker_namespace`` scopes the replay markers: ``batch_id`` is
+    ``marker_namespace`` scopes the replay mark: ``batch_id`` is
     unique only within ONE checkpoint lineage, so two different
     streams (or a stream restarted with a fresh checkpoint) feeding
     the same index would collide on ``batch_id=0, 1, ...`` and the
@@ -106,42 +102,15 @@ def ivf_append_batch(
     (one logical lineage). Deleting a checkpoint's CONTENTS while
     reusing its path restarts batch ids inside the same namespace —
     as with any Structured Streaming sink state, clear the matching
-    ``_ingest_batches/<namespace>`` alongside.
-
-    Late r14: the per-namespace ``_last_batch`` mark file replaced one
-    per-batch marker directory per trigger (unbounded tiny-dir
-    accumulation for an O(1) check). A torn mark write re-appends one
-    batch on replay — the SAME double-append window the module
-    docstring already documents for a crash between the parquet commit
-    and the marker, tolerated for the same reason (duplicate vectors
-    don't change search results; the next rebuild heals the table).
-    Pre-existing per-batch markers are honored and retired as the mark
-    passes them."""
+    ``_ingest_batches/<namespace>`` alongside."""
     ns = f"{marker_namespace}/" if marker_namespace else ""
-    marker_dir = f"{index_path}/_ingest_batches/{ns}"
-    mark_file = f"{marker_dir}_last_batch"
-    mark = fs_read_text(spark, mark_file)
-    done = False
-    if mark is not None:
-        try:
-            done = int(mark) >= batch_id
-        except ValueError:
-            pass  # torn mark: re-append (the documented window)
-    if not done:
-        done = fs_exists(spark, f"{marker_dir}batch_id={batch_id}")
-    if not done:
+    mark_file = f"{index_path}/_ingest_batches/{ns}_last_batch"
+    mark = read_mark(spark, mark_file)
+    if mark is None or mark < batch_id:
         ivf_append(spark, index_path, batch_df, id_col, vec_col)
         # mark AFTER the append commit: a replay that sees it knows
         # the data landed (module docstring covers the crash window)
-        fs_write_text(spark, mark_file, str(batch_id))
-        for name in fs_ls(spark, marker_dir.rstrip("/")):
-            if name.startswith("batch_id="):
-                try:
-                    b = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if b <= batch_id:
-                    fs_delete(spark, f"{marker_dir}{name}")
+        advance_mark(spark, mark_file, batch_id)
     return ivf_cell_stats(spark, index_path) if compute_stats else None
 
 

@@ -18,18 +18,19 @@ streams with zero state. Two batch-only steps are intentionally absent:
 
 from __future__ import annotations
 
-import functools
-import operator as pyop
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_data_warehouse_spark.operators.cleansing import (
-    ORDER_DATE_FORMAT,
-    REQUIRED_RAW,
     _split_address,
+    _split_rejects,
 )
 from sales_data_warehouse_spark.schemas import LANDING_COLUMNS, RAW_CSV_COLUMNS
+from sales_data_warehouse_spark.sources.compaction import (
+    advance_mark,
+    enforce_output_lineage,
+    read_mark,
+)
 
 
 def read_sales_csv_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
@@ -56,41 +57,15 @@ def read_sales_csv_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
 def cleanse_stream(landing: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split a landing *stream* into (cleansed, invalid) streams.
 
-    Same reject semantics as the batch cleanse (SURVEY P2/P3): NULL in a
-    required field or any cast failure routes the raw row to invalid.
-    Entirely stateless — a pure per-row projection + filter, so it runs
-    in append mode with no state store and no shuffle.
+    The reject rule is the batch cleanse's own (``_split_rejects``,
+    SURVEY P2/P3): NULL in a required field or any cast failure routes
+    the raw row to invalid. Entirely stateless — a pure per-row
+    projection + filter, so it runs in append mode with no state store
+    and no shuffle.
     """
-    null_any = functools.reduce(
-        pyop.or_, (F.col(c).isNull() for c in REQUIRED_RAW)
-    )
-    typed = landing.withColumns(
-        {
-            "_order_id": F.col("order_id").cast("int"),
-            "_quantity": F.col("quantity_ordered").cast("int"),
-            "_price": F.col("price_each").cast("decimal(10,2)"),
-            "_ts": F.to_timestamp(F.col("order_date"), ORDER_DATE_FORMAT),
-        }
-    )
-    cast_failed = (
-        (F.col("_quantity").isNull() & F.col("quantity_ordered").isNotNull())
-        | (F.col("_price").isNull() & F.col("price_each").isNotNull())
-        | (F.col("_ts").isNull() & F.col("order_date").isNotNull())
-        | (F.col("_order_id").isNull() & F.col("order_id").isNotNull())
-    )
-    reason = (
-        F.when(null_any, F.lit("null_required_field"))
-        .when(cast_failed, F.lit("cast_failure"))
-        .otherwise(F.lit(None))
-    )
-    flagged = typed.withColumn("_reject", reason)
-
-    invalid = flagged.filter(F.col("_reject").isNotNull()).select(
-        *LANDING_COLUMNS, F.col("_reject").alias("reject_reason")
-    )
-
+    valid, invalid = _split_rejects(landing)
     addr = _split_address(F.col("purchase_address"))
-    cleansed = flagged.filter(F.col("_reject").isNull()).select(
+    cleansed = valid.select(
         F.col("_order_id").alias("order_id"),
         F.trim(F.col("product")).alias("product"),
         F.col("_quantity").alias("quantity_ordered"),
@@ -131,20 +106,9 @@ def etl_batch_sink(
 
     from pyspark import StorageLevel, inheritable_thread_target
 
-    from sales_data_warehouse_spark.sources.compaction import (
-        fs_read_text,
-        fs_write_text,
-    )
-
     def _committed(table: str) -> bool:
-        mark = fs_read_text(spark, f"{output_dir}/{table}/_last_batch")
-        if mark is None:
-            return False
-        try:
-            return int(mark) >= batch_id
-        except ValueError:
-            # torn mark write: re-append (the documented window)
-            return False
+        mark = read_mark(spark, f"{output_dir}/{table}/_last_batch")
+        return mark is not None and mark >= batch_id
 
     todo = [t for t in ("cleansed", "invalid") if not _committed(t)]
     if not todo:
@@ -161,9 +125,9 @@ def etl_batch_sink(
                 writer = writer.partitionBy("order_date")
             writer.parquet(f"{output_dir}/{table}")
             # mark AFTER the append commit: a replay that sees it knows
-            # the data landed (docstring covers the torn-mark window)
-            fs_write_text(
-                spark, f"{output_dir}/{table}/_last_batch", str(batch_id)
+            # the data landed (start_streaming_etl covers the window)
+            advance_mark(
+                spark, f"{output_dir}/{table}/_last_batch", batch_id
             )
 
         with ThreadPoolExecutor(max_workers=2) as pool:
@@ -193,16 +157,14 @@ def start_streaming_etl(
 
     Returns the StreamingQuery (caller owns stop/awaitTermination).
 
-    Replay semantics (r15, closing the r14 double-append window): each
-    table carries a ``_last_batch`` high-water mark (the
-    ``embeddings.ivf_append_batch`` pattern) written AFTER its append
-    commits, so a checkpoint replay — including a crash BETWEEN the
-    two appends — skips the table(s) that already committed instead of
+    Replay semantics: each table carries a ``_last_batch`` high-water
+    mark, advanced with ``compaction.advance_mark`` AFTER its append
+    commits, so a checkpoint replay — including a crash BETWEEN the two
+    appends — skips the table(s) that already committed instead of
     re-appending them. The remaining at-least-once window is a crash
-    between ONE table's parquet commit and its mark write, which
-    double-appends that one batch for that one table on replay — the
-    same torn-mark window every marked sink in the package documents
-    and tolerates (a later batch's mark retires it).
+    between ONE table's parquet commit and its mark advance, which
+    re-appends that one batch for that one table on replay; no earlier
+    batch can re-append.
 
     ONE OUTPUT DIR = ONE CHECKPOINT LINEAGE
     (``compaction.enforce_output_lineage``, r14): ``batch_id`` (and so
@@ -211,10 +173,6 @@ def start_streaming_etl(
     every already-processed file (forgotten source offsets) and read
     stale marks as already-committed. Refused at start instead.
     """
-    from sales_data_warehouse_spark.sources.compaction import (
-        enforce_output_lineage,
-    )
-
     checkpoint = checkpoint_dir or f"{output_dir}/_checkpoint"
     enforce_output_lineage(
         spark, output_dir, checkpoint, "start_streaming_etl"

@@ -43,6 +43,35 @@ def test_compact_preserves_rows_and_reduces_files(spark, tmp_path):
     assert not (tmp_path / "frag.compact_old").exists()
 
 
+def test_compact_table_recovers_a_swap_crashed_between_renames(
+    spark, tmp_path
+):
+    """compact_table swaps through staged_overwrite, so a crash between
+    its two renames (the table moved to ``path + '.stage_old'``, the
+    rewrite left at ``.stage_tmp``) is restored by recover_staged — on
+    its own, and as the first step of the next compact_table."""
+    import shutil
+
+    from sales_data_warehouse_spark.sources.compaction import (
+        recover_staged,
+    )
+
+    path = str(tmp_path / "frag")
+    _fragmented(spark, path, rows=2000, files=8)
+    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+    shutil.copytree(path, path + ".stage_tmp")
+    shutil.move(path, path + ".stage_old")
+    assert recover_staged(spark, path)
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+
+    shutil.move(path, path + ".stage_old")
+    assert compact_table(spark, path) == 1
+    assert parquet_file_count(spark, path) == 1
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+    assert not (tmp_path / "frag.stage_old").exists()
+    assert not (tmp_path / "frag.stage_tmp").exists()
+
+
 def test_compact_sorted_files_have_disjoint_bounds(spark, tmp_path):
     path = str(tmp_path / "frag_sorted")
     _fragmented(spark, path, rows=200000, files=30)

@@ -144,20 +144,6 @@ def test_reservoir_fold_batch_replay_semantics(spark, tmp_path):
         r.doc_id for r in spark.read.parquet(f"{res}/rows").collect()
     } == after
     assert fs_read_text(spark, f"{res}/_ingest_batches/_last_batch") == "1"
-    # legacy per-batch marker dirs are honored: plant one for a new
-    # batch id and the fold must skip it outright — proven with a
-    # POISONED batch whose giant weights would displace every
-    # reservoir row if the fold actually ran
-    poisoned = docs.selectExpr(
-        "doc_id + 1000000 AS doc_id", "lang", "n_chars * 1000 AS n_chars"
-    )
-    spark.createDataFrame([(9,)], "batch_id long").write.parquet(
-        f"{res}/_ingest_batches/batch_id=9"
-    )
-    assert reservoir_fold_batch(spark, res, poisoned, 9, "n_chars", 25) == 25
-    assert {
-        r.doc_id for r in spark.read.parquet(f"{res}/rows").collect()
-    } == after
     # and the final reservoir equals the global sampler over the union
     want = {
         r.doc_id

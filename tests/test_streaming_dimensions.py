@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import shutil
 
+import pytest
+
 from sales_data_warehouse_spark.etl import run_etl
 from sales_data_warehouse_spark.streaming.dimensions import (
     start_streaming_dimensions,
@@ -175,3 +177,51 @@ def test_streaming_warehouse_fact_matches_batch(spark, tmp_path):
             wh,
             checkpoint_dir=str(tmp_path / "fresh_ckpt"),
         )
+
+
+@pytest.mark.parametrize("with_fact", [False, True])
+def test_inline_drops_match_batch(spark, tmp_path, with_fact):
+    """Both dimension sinks on two inline-CSV micro-batches (a restarted
+    query on one checkpoint), no reference CSV needed: the time
+    dimension equals ``run_etl`` over the same rows bit for bit, the
+    product and location dimensions hold the same natural keys, and the
+    warehouse sink's fact carries the same natural keys + measures."""
+    from tests.test_increment_synthetic import BASE, DROPS, HEADER
+
+    from sales_data_warehouse_spark.streaming.dimensions import (
+        start_streaming_warehouse,
+    )
+
+    start = start_streaming_warehouse if with_fact else (
+        start_streaming_dimensions
+    )
+    bodies = [BASE, DROPS[0] + DROPS[1]]
+    full_csv = tmp_path / "all.csv"
+    full_csv.write_text(HEADER + "\n" + "".join(bodies))
+    full = run_etl(spark, str(full_csv), output_dir=str(tmp_path / "full"))
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    wh = str(tmp_path / "wh")
+    for i, body in enumerate(bodies):
+        (drop / f"b{i}.csv").write_text(HEADER + "\n" + body)
+        start(spark, str(drop), wh, available_now=True).awaitTermination()
+
+    def rows(df, cols=None):
+        return sorted(map(tuple, (df.select(*cols) if cols else df).collect()))
+
+    read = spark.read.parquet
+    assert rows(read(f"{wh}/time_dimension")) == rows(full.time_dimension)
+    key = ["product_name", "price_each"]
+    assert rows(read(f"{wh}/product_dimension"), key) == rows(
+        full.product_dimension, key
+    )
+    lkey = ["street_name", "city_name", "state_name", "postal"]
+    assert rows(read(f"{wh}/location_dimension"), lkey) == rows(
+        full.location_dimension, lkey
+    )
+    assert read(f"{wh}/cleansed").select("batch_id").distinct().count() == 2
+    if with_fact:
+        cols = ["product", "order_date", "street_name", "postal",
+                "quantity_ordered", "price_each"]
+        assert rows(read(f"{wh}/fact"), cols) == rows(full.fact, cols)

@@ -118,45 +118,6 @@ def test_replay_skips_via_high_water_mark(spark, batches, tmp_path):
     assert spark.read.parquet(f"{out}/fingerprints/fp").count() == 3
 
 
-def test_legacy_flat_state_migrates_and_gains_mark(spark, batches, tmp_path):
-    """A pre-r14 state (flat fingerprint parquet, no mark) is read via
-    the containment fallback exactly once: the next fold migrates it
-    to the marked ``fp`` layout, after which replays skip by mark."""
-    import shutil
-
-    from sales_data_warehouse_spark.sources.compaction import (
-        fs_read_text,
-    )
-
-    out = str(tmp_path / "dedup")
-    b1, b2 = batches
-    dedup_documents_batch(spark, b1, 0, out)
-    # rebuild the pre-r14 layout by hand: flat parquet, no mark (and
-    # no batch_id — that column is the append layout's partition key,
-    # which a real v1 state never carried)
-    legacy = str(tmp_path / "legacy_fp")
-    spark.read.parquet(f"{out}/fingerprints/fp").drop(
-        "batch_id"
-    ).write.parquet(legacy)
-    shutil.rmtree(f"{out}/fingerprints")
-    shutil.move(legacy, f"{out}/fingerprints")
-    # replay batch 0 against the legacy state: containment fallback
-    # detects the fully-merged batch and skips (no clobber)
-    dedup_documents_batch(spark, b1, 0, out)
-    assert sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(f"{out}/admitted").collect()
-    ) == [1, 2]
-    # next real fold migrates the layout and stamps the mark
-    dedup_documents_batch(spark, b2, 1, out)
-    assert fs_read_text(spark, f"{out}/fingerprints/_last_batch") == "1"
-    assert spark.read.parquet(f"{out}/fingerprints/fp").count() == 3
-    assert sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(f"{out}/admitted").collect()
-    ) == [1, 2, 5]
-
-
 def test_streamed_drain_matches_batch_dedup(spark, tmp_path):
     drop = tmp_path / "drop"
     drop.mkdir()
@@ -355,44 +316,6 @@ def test_torn_mark_falls_back_to_success_scan(spark, batches, tmp_path):
     assert spark.read.parquet(f"{out}/fingerprints/fp").count() == 3
 
 
-def test_v2_staged_layout_migrates_by_rename(spark, batches, tmp_path):
-    """An r14-early state (flat staged generation under fp/ + atomic
-    mark) migrates by pure rename into ``fp/batch_id=<mark>`` on first
-    contact; the next fold appends its delta beside it."""
-    import shutil
-
-    from sales_data_warehouse_spark.sources.compaction import (
-        fs_read_text,
-    )
-
-    out = str(tmp_path / "dedup")
-    b1, b2 = batches
-    dedup_documents_batch(spark, b1, 0, out)
-    # rebuild the v2 layout by hand: the union parquet flat under fp/,
-    # the mark beside it
-    flat = str(tmp_path / "v2_flat")
-    spark.read.parquet(f"{out}/fingerprints/fp").drop(
-        "batch_id"
-    ).write.parquet(flat)
-    shutil.rmtree(f"{out}/fingerprints/fp")
-    shutil.move(flat, f"{out}/fingerprints/fp")
-    assert fs_read_text(spark, f"{out}/fingerprints/_last_batch") == "0"
-
-    dedup_documents_batch(spark, b2, 1, out)
-    state = spark.read.parquet(f"{out}/fingerprints/fp")
-    per_batch = {
-        r["batch_id"]: r["n"]
-        for r in state.groupBy("batch_id").agg(
-            F.count(F.lit(1)).alias("n")
-        ).collect()
-    }
-    assert per_batch == {0: 2, 1: 1}  # migrated under mark + new delta
-    assert sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(f"{out}/admitted").collect()
-    ) == [1, 2, 5]
-
-
 def test_compact_dedup_state_merges_and_stays_correct(
     spark, batches, tmp_path
 ):
@@ -473,50 +396,6 @@ def test_compaction_crash_recovers_before_next_fold(
         if t[1] != 7
     )
     assert got == rows_before
-
-
-def test_near_dedup_legacy_band_state_migrates(spark, tmp_path):
-    """A pre-append band state (flat under band_state/) migrates by
-    rename into batch_id=-1; the next fold probes against it and
-    appends its own partition — pair set as if never migrated."""
-    import shutil
-
-    from sales_data_warehouse_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-    from sales_data_warehouse_spark.streaming.documents import (
-        near_dedup_documents_batch,
-    )
-
-    t = "the quick brown fox jumps over the lazy dog tonight"
-    b1 = _docs(spark, [(0, t + " a"), (1, t + " b")])
-    b2 = _docs(spark, [(2, t + " a"), (3, "totally unrelated words")])
-    out = str(tmp_path / "near")
-    near_dedup_documents_batch(spark, b1, 0, out)
-    # flatten the state back to the legacy layout
-    flat = str(tmp_path / "legacy_band")
-    spark.read.parquet(f"{out}/band_state").drop(
-        "batch_id"
-    ).write.parquet(flat)
-    shutil.rmtree(f"{out}/band_state")
-    shutil.move(flat, f"{out}/band_state")
-
-    near_dedup_documents_batch(spark, b2, 1, out)
-    state = spark.read.parquet(f"{out}/band_state")
-    assert {r["batch_id"] for r in state.select(
-        "batch_id"
-    ).distinct().collect()} == {-1, 1}
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in spark.read.parquet(f"{out}/pairs").collect()
-    }
-    want = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_pairs(
-            b1.unionByName(b2)
-        ).collect()
-    }
-    assert got == want and len(want) > 0
 
 
 def test_compact_band_state_preserves_pairs_and_replay(spark, tmp_path):
@@ -713,39 +592,6 @@ def test_near_dedup_fold_sequence_property(spark, tmp_path_factory,
         for r in minhash_lsh_pairs(_docs(spark, docs)).collect()
     }
     assert got == want
-
-
-def test_v2_migration_resumes_after_crash(spark, batches, tmp_path):
-    """A v2 migration that crashed after its first rename leaves the
-    flat table waiting at fp.v2mig; the next fold must finish the move
-    (into batch_id=<mark>) before reading anything."""
-    import shutil
-
-    out = str(tmp_path / "dedup")
-    b1, b2 = batches
-    dedup_documents_batch(spark, b1, 0, out)
-    # rebuild the v2 layout, then simulate the crash: flat table
-    # already renamed to the migration waypoint, fp/ gone
-    flat = str(tmp_path / "v2_flat")
-    spark.read.parquet(f"{out}/fingerprints/fp").drop(
-        "batch_id"
-    ).write.parquet(flat)
-    shutil.rmtree(f"{out}/fingerprints/fp")
-    shutil.move(flat, f"{out}/fingerprints/fp.v2mig")
-
-    dedup_documents_batch(spark, b2, 1, out)
-    state = spark.read.parquet(f"{out}/fingerprints/fp")
-    per_batch = {
-        r["batch_id"]: r["n"]
-        for r in state.groupBy("batch_id").agg(
-            F.count(F.lit(1)).alias("n")
-        ).collect()
-    }
-    assert per_batch == {0: 2, 1: 1}
-    assert sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(f"{out}/admitted").collect()
-    ) == [1, 2, 5]
 
 
 def test_missing_mark_file_falls_back_to_success_scan(
