@@ -8,7 +8,9 @@ reference's table boundaries so any stage can be re-run independently.
 
 from __future__ import annotations
 
+import hashlib
 import logging
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +30,9 @@ from sales_data_warehouse_spark.operators.time_dimension import (
     merge_time_dimension,
 )
 from sales_data_warehouse_spark.sources.compaction import (
+    fs_delete,
+    fs_exists,
+    fs_qualify,
     recover_staged,
     staged_overwrite,
 )
@@ -66,12 +71,13 @@ def _job_pool(spark: SparkSession):
 
     from pyspark import inheritable_thread_target
 
-    # the increment's widest phase: both appends may still run beside
-    # the three dimension replaces and the fact append
+    # the fold's widest phase: both drop writes may still run beside
+    # the three dimension replaces and the fact write
     pool = ThreadPoolExecutor(max_workers=6)
 
-    def submit(fn, *args):
-        return pool.submit(inheritable_thread_target(spark)(fn), *args)
+    def submit(fn, *args, **kwargs):
+        target = inheritable_thread_target(spark)(fn)
+        return pool.submit(target, *args, **kwargs)
 
     return submit, pool
 
@@ -80,20 +86,37 @@ def _write(
     df: DataFrame,
     output_dir: str,
     name: str,
+    key: str | int | None = None,
     partition_by: list | None = None,
-    mode: str = "overwrite",
+    replace: bool = False,
 ) -> None:
-    """Write ``df`` as table ``name``; ``mode="replace"`` swaps it in
-    crash-safely (``staged_overwrite``: the previous table survives a
-    failed write). Job descriptions are thread-local, so each concurrent
-    write labels its own jobs."""
+    """Write ``df`` as table ``name``. With a ``key`` it becomes the
+    table's ``batch_id=<key>`` partition, so the overwrite replaces only
+    that drop's rows and a replayed drop rewrites its own partition;
+    ``replace=True`` swaps the whole table in crash-safely
+    (``staged_overwrite``: the previous table survives a failed write).
+    Job descriptions are thread-local, so each concurrent write labels
+    its own jobs."""
     spark = df.sparkSession
     spark.sparkContext.setJobDescription(f"etl: write {name}")
     path = f"{output_dir}/{name}"
-    if mode == "replace":
+    if replace:
         staged_overwrite(spark, df, path)
     else:
-        write_table(df, path, partition_by=partition_by, mode=mode)
+        if key is not None:
+            path = f"{path}/batch_id={key}"
+        write_table(df, path, partition_by=partition_by)
+
+
+def _drop_key(spark: SparkSession, path: str) -> str:
+    """The ``batch_id`` of a file drop: its sanitized stem plus 8 hex
+    digits of the hash of its Hadoop-qualified path. Re-running a path
+    rewrites its own partitions; two paths never share a key, even with
+    equal base names."""
+    qualified = fs_qualify(spark, path)
+    name = qualified.rstrip("/").rsplit("/", 1)[-1]
+    stem = re.sub(r"[^A-Za-z0-9_.-]", "_", name.rsplit(".", 1)[0] or name)
+    return f"{stem}-{hashlib.sha1(qualified.encode()).hexdigest()[:8]}"
 
 
 def run_etl(
@@ -108,6 +131,10 @@ def run_etl(
     ``dense=True`` to materialize the reference's cube semantics.
     When ``output_dir`` is set, each stage is written as parquet (the
     fact partitioned by month for partition pruning on time slices).
+    cleansed, invalid and the fact land in the CSV's own ``batch_id``
+    partition (``_drop_key``), the layout ``run_etl_increment`` and the
+    warehouse stream add their drops to; a full refresh first clears
+    every earlier drop.
     """
     from pyspark import StorageLevel
 
@@ -136,12 +163,17 @@ def run_etl(
         #     the block lock);
         #   * the three dimension writes run at once;
         #   * the fact write, after all three.
+        key = _drop_key(spark, csv_path)
+        for name in ("cleansed", "invalid", "fact"):
+            fs_delete(spark, f"{output_dir}/{name}")
         submit, pool = _job_pool(spark)
         try:
-            f_cleansed = submit(_write, cleansed, output_dir, "cleansed")
-            f_invalid = submit(_write, invalid, output_dir, "invalid")
+            f_cleansed = submit(_write, cleansed, output_dir, "cleansed", key)
+            f_invalid = submit(_write, invalid, output_dir, "invalid", key)
             f_cleansed.result()
-            cleansed = spark.read.parquet(f"{output_dir}/cleansed")
+            cleansed = spark.read.parquet(
+                f"{output_dir}/cleansed/batch_id={key}"
+            )
             # Write each dimension BEFORE the fact build and re-read it
             # from parquet: the fact (and dense cube) otherwise
             # re-executes every dimension's window pipeline once per
@@ -164,8 +196,10 @@ def run_etl(
             fact = build_fact(cleansed, prod_dim, loc_dim, time_dim)
             if dense:
                 fact = dense_fact(fact, prod_dim, loc_dim, time_dim)
-            submit(_write, fact, output_dir, "fact", ["month_id"]).result()
-            fact = spark.read.parquet(f"{output_dir}/fact")
+            submit(
+                _write, fact, output_dir, "fact", key, ["month_id"]
+            ).result()
+            fact = spark.read.parquet(f"{output_dir}/fact/batch_id={key}")
             # the one remaining landing consumer — surfacing its error
             # (if any) before this function reports success
             f_invalid.result()
@@ -212,13 +246,108 @@ def register_views(spark: SparkSession, result: EtlResult) -> None:
     result.fact.createOrReplaceTempView("fact_table")
 
 
-def _merge(merge, prior: DataFrame, cleansed_new: DataFrame, name: str):
-    """One dimension merge, materialized: ``localCheckpoint`` computes
-    the merged rows once for both consumers (the fact build and the
+_DIMENSIONS = (
+    ("location_dimension", build_location_dimension, merge_location_dimension),
+    ("product_dimension", build_product_dimension, merge_product_dimension),
+    ("time_dimension", build_time_dimension, merge_time_dimension),
+)
+
+
+def _materialize(name: str, fold, *inputs: DataFrame) -> DataFrame:
+    """One dimension built or merged, materialized: ``localCheckpoint``
+    computes its rows once for both consumers (the fact build and the
     dimension replace) and cuts the plan loose from the prior parquet
     that the replace swaps out."""
-    prior.sparkSession.sparkContext.setJobDescription(f"etl: merge {name}")
-    return merge(prior, cleansed_new).localCheckpoint()
+    spark = inputs[0].sparkSession
+    spark.sparkContext.setJobDescription(f"etl: merge {name}")
+    return fold(*inputs).localCheckpoint()
+
+
+def _fold(
+    spark: SparkSession,
+    landing: DataFrame,
+    cleansed: DataFrame,
+    invalid: DataFrame,
+    output_dir: str,
+    key: str | int,
+) -> dict[str, DataFrame]:
+    """Fold one drop of cleansed rows into the warehouse at
+    ``output_dir``; returns the folded dimensions. Every warehouse sink
+    calls this: ``run_etl_increment`` per CSV, the warehouse stream
+    per micro-batch.
+
+    Every write replaces only what belongs to this drop, so a re-run
+    or a replayed micro-batch rewrites its own output and a write that
+    failed half-way is mended by running the drop again:
+      * cleansed, invalid and the fact overwrite their
+        ``batch_id=<key>`` partition (the fact month-partitioned inside
+        it, ``fact/batch_id=<key>/month_id=M``, so time slices prune);
+      * each dimension is built from the drop where it is absent and
+        merged into otherwise. The merges are append-stable and
+        idempotent: existing ids stay verbatim, new keys are numbered
+        past the max, time ids are pure date functions, and merging
+        rows the dimension holds already changes nothing. A swap that
+        crashed half-way is recovered before the existence check, and
+        each merged dimension is swapped in crash-safely
+        (``staged_overwrite``), so a failed fold never loses one.
+
+    The merges make no driver round-trips: the id offsets and the
+    calendar's range are 1-row aggregates inside their plans. The fold
+    runs as a dependency DAG on the ``run_etl`` job pool (the reference
+    runs its stages one after another, ``MotherProcedure.sql:7-22``):
+
+      1. the cleansed and invalid writes and the three
+         build/merge + ``localCheckpoint`` steps are submitted at once
+         (``landing`` and ``cleansed``, which five jobs read, are
+         persisted and released in a ``finally``);
+      2. once the dimensions are done, their three replaces and the
+         fact write run at once.
+
+    All jobs inherit the caller's job group (``_job_pool``).
+    """
+    from pyspark import StorageLevel
+
+    landing.persist(StorageLevel.MEMORY_AND_DISK)
+    cleansed.persist(StorageLevel.MEMORY_AND_DISK)
+    submit, pool = _job_pool(spark)
+    try:
+        writes = [
+            submit(_write, cleansed, output_dir, "cleansed", key),
+            submit(_write, invalid, output_dir, "invalid", key),
+        ]
+        folds = {}
+        for name, build, merge in _DIMENSIONS:
+            path = f"{output_dir}/{name}"
+            # restore a swap that crashed between its renames first: a
+            # dimension found missing would be rebuilt from this drop
+            # alone, losing its history
+            recover_staged(spark, path)
+            if fs_exists(spark, path):
+                inputs = (merge, spark.read.parquet(path), cleansed)
+            else:
+                inputs = (build, cleansed)
+            folds[name] = submit(_materialize, name, *inputs)
+        dims = {name: f.result() for name, f in folds.items()}
+        fact = build_fact(
+            cleansed,
+            dims["product_dimension"],
+            dims["location_dimension"],
+            dims["time_dimension"],
+        )
+        writes += [
+            submit(_write, dim, output_dir, name, replace=True)
+            for name, dim in dims.items()
+        ]
+        writes.append(
+            submit(_write, fact, output_dir, "fact", key, ["month_id"])
+        )
+        for f in writes:
+            f.result()
+    finally:
+        pool.shutdown(wait=True)
+        cleansed.unpersist()
+        landing.unpersist()
+    return dims
 
 
 def run_etl_increment(
@@ -228,90 +357,25 @@ def run_etl_increment(
 ) -> EtlResult:
     """Fold a new sales CSV into a warehouse previously written by
     ``run_etl(..., output_dir=output_dir)`` — without rescanning
-    historical facts.
+    historical facts. Work scales with the CSV and the dimensions,
+    never with history.
 
-    Incremental strategy per table (work scales with the increment +
-    the dimensions, never with history):
-      * cleansed/invalid — cleanse the new batch only; append.
-        (Full-row DISTINCT applies within the batch, matching the
-        reference's per-run semantics; cross-batch exact duplicates are
-        a stream concern — see ``streaming.dedupe_within``.)
-      * location/product — append-stable merges (existing ids verbatim,
-        new keys numbered past the max).
-      * time — rebuilt over the union range (ids are pure date
-        functions, so existing rows reproduce bit-for-bit).
-      * fact — built for the new order lines against the MERGED
-        dimensions; appended (month-partitioned, so a month's partition
-        only grows while it is active).
-
-    The merges make no driver round-trips: the id offsets (each
-    location level's maximum, the product count) and the calendar's
-    date range are 1-row aggregates inside their plans, so building a
-    merge submits no Spark job. The increment then runs as a
-    dependency DAG on the ``run_etl`` job pool (the reference runs its
-    stages one after another, ``MotherProcedure.sql:7-22``):
-
-      1. the cleansed and invalid appends and the three
-         merge + ``localCheckpoint`` steps are submitted at once (the
-         parsed CSV and the cleansed batch, which five jobs read, are
-         persisted and released in a ``finally``);
-      2. once the merges are done, the three dimension replaces and
-         the fact append run at once.
-
-    Each dimension is replaced crash-safely (``staged_overwrite``, the
-    protocol the streaming fold uses for the same tables), and a swap
-    that crashed half-way is recovered before the prior dimensions are
-    read, so a failed increment never loses a dimension. All jobs
-    inherit the caller's job group (``_job_pool``).
+    The CSV is cleansed on its own (the full-row DISTINCT and the
+    ``max + n`` ids apply within it, matching the reference's per-run
+    semantics; cross-drop exact duplicates are a stream concern — see
+    ``streaming.dedupe_within``) and folded in by ``_fold`` under a key
+    derived from its path (``_drop_key``): running the same CSV again
+    rewrites its own partitions and leaves every table unchanged.
     """
-    from pyspark import StorageLevel
-
-    prior = {}
-    for name in ("location_dimension", "product_dimension", "time_dimension"):
-        recover_staged(spark, f"{output_dir}/{name}")
-        prior[name] = spark.read.parquet(f"{output_dir}/{name}")
-
-    landing = ingest_csv(spark, csv_path).persist(StorageLevel.MEMORY_AND_DISK)
-    cleansed_new, invalid_new = cleanse(landing)
-    cleansed_new = cleansed_new.persist(StorageLevel.MEMORY_AND_DISK)
-    submit, pool = _job_pool(spark)
-    try:
-        appends = [
-            submit(_write, cleansed_new, output_dir, "cleansed", None, "append"),
-            submit(_write, invalid_new, output_dir, "invalid", None, "append"),
-        ]
-        merges = {
-            name: submit(_merge, merge, prior[name], cleansed_new, name)
-            for name, merge in [
-                ("location_dimension", merge_location_dimension),
-                ("product_dimension", merge_product_dimension),
-                ("time_dimension", merge_time_dimension),
-            ]
-        }
-        dims = {name: f.result() for name, f in merges.items()}
-        fact_new = build_fact(
-            cleansed_new,
-            dims["product_dimension"],
-            dims["location_dimension"],
-            dims["time_dimension"],
-        )
-        writes = [
-            submit(_write, dim, output_dir, name, None, "replace")
-            for name, dim in dims.items()
-        ]
-        writes.append(
-            submit(_write, fact_new, output_dir, "fact", ["month_id"], "append")
-        )
-        for f in appends + writes:
-            f.result()
-    finally:
-        pool.shutdown(wait=True)
-        cleansed_new.unpersist()
-        landing.unpersist()
-
+    landing = ingest_csv(spark, csv_path)
+    cleansed, invalid = cleanse(landing)
+    dims = _fold(
+        spark, landing, cleansed, invalid, output_dir,
+        _drop_key(spark, csv_path),
+    )
     return EtlResult(
         landing=landing,
-        invalid=invalid_new,
+        invalid=invalid,
         cleansed=spark.read.parquet(f"{output_dir}/cleansed"),
         time_dimension=dims["time_dimension"],
         location_dimension=dims["location_dimension"],

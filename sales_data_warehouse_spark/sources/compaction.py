@@ -1,12 +1,13 @@
 """Small-files compaction for parquet tables.
 
-Incremental pipelines accrete files: ``run_etl_increment`` appends a
-few files per batch into each month partition, streaming sinks append
-per micro-batch — after a thousand batches a 100 TB table is millions
-of tiny files and every scan pays open/footer/seek costs per file
-(plus driver-side listing memory). Compaction rewrites a table (or one
-partition of it) into size-targeted files, optionally sorted so
-min/max footer stats prune within the partition.
+Incremental pipelines accrete files: ``run_etl_increment`` and the
+warehouse stream write a few files per drop into the drop's own
+``batch_id`` partition, other streaming sinks append per micro-batch —
+after a thousand batches a 100 TB table is millions of tiny files and
+every scan pays open/footer/seek costs per file (plus driver-side
+listing memory). Compaction rewrites a table (or one partition of it)
+into size-targeted files, optionally sorted so min/max footer stats
+prune within the partition.
 
 Shape at scale: ONE job per compaction — a scan, an exchange to
 ``ceil(bytes / target)`` partitions (range exchange when sort columns
@@ -21,7 +22,9 @@ crash between renames is restored by ``recover_staged``).
 The module also holds the Hadoop FileSystem helpers the streaming
 sinks share, among them the one replay mark every marked
 ``foreachBatch`` sink reads and advances (``read_mark``,
-``advance_mark``).
+``advance_mark``). The warehouse sinks (``etl._fold`` and the
+streaming ETL sink) need no mark: each overwrites its own ``batch_id``
+partition, so a replay rewrites what it wrote before.
 """
 
 from __future__ import annotations
@@ -43,6 +46,13 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     HDFS/object-store URIs where ``os.path.exists`` is always False."""
     fs, hpath, _ = _hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
+
+
+def fs_qualify(spark: SparkSession, path: str) -> str:
+    """``path`` fully qualified by its file system (scheme, authority,
+    absolute path), so every spelling of one location reads the same."""
+    fs, hpath, _ = _hadoop_fs(spark, path)
+    return str(fs.makeQualified(hpath).toString())
 
 
 def fs_delete(spark: SparkSession, path: str) -> bool:

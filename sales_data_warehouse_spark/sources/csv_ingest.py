@@ -24,6 +24,18 @@ from sales_data_warehouse_spark.schemas import (
 
 log = logging.getLogger(__name__)
 
+#: Postgres CSV semantics, shared by the batch reader and the
+#: drop-directory stream: header skipped, ``,`` delimiter, ``"`` quote
+#: with ``""`` as the escaped quote inside a quoted field, and
+#: PERMISSIVE parsing so malformed rows survive to reject-routing.
+CSV_OPTIONS = {
+    "header": True, "quote": '"', "escape": '"', "sep": ",",
+    "mode": "PERMISSIVE",
+}
+#: Every field read raw as a string: typing happens in cleansing
+#: (schema-on-read), like the reference's all-TEXT landing table.
+RAW_CSV_SCHEMA = ", ".join(f"`{c}` STRING" for c in RAW_CSV_COLUMNS)
+
 
 def ingest_csv(spark: SparkSession, path: str) -> DataFrame:
     """Read a sales CSV (or directory/glob of them) into the landing shape.
@@ -35,21 +47,8 @@ def ingest_csv(spark: SparkSession, path: str) -> DataFrame:
     PERMISSIVE mode so malformed *rows* survive to reject-routing, and let
     genuinely unreadable *files* raise (caller decides, like psql's NOTICE).
     """
-    df = (
-        spark.read.csv(
-            path,
-            header=True,
-            quote='"',
-            escape='"',
-            sep=",",
-            # keep strings raw: typing happens in cleansing (schema-on-read)
-            schema=", ".join(f"`{c}` STRING" for c in RAW_CSV_COLUMNS),
-            mode="PERMISSIVE",
-        )
-    )
-    for raw, canon in zip(RAW_CSV_COLUMNS, LANDING_COLUMNS):
-        df = df.withColumnRenamed(raw, canon)
-    return df
+    df = spark.read.csv(path, schema=RAW_CSV_SCHEMA, **CSV_OPTIONS)
+    return df.toDF(*LANDING_COLUMNS)
 
 
 def landing_from_rows(spark: SparkSession, rows: list[tuple]) -> DataFrame:

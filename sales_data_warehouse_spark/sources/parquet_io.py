@@ -13,12 +13,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_table(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

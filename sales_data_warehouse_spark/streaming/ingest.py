@@ -25,29 +25,24 @@ from sales_data_warehouse_spark.operators.cleansing import (
     _split_address,
     _split_rejects,
 )
-from sales_data_warehouse_spark.schemas import LANDING_COLUMNS, RAW_CSV_COLUMNS
+from sales_data_warehouse_spark.etl import _job_pool, _write
+from sales_data_warehouse_spark.schemas import LANDING_COLUMNS
 from sales_data_warehouse_spark.sources.compaction import (
-    advance_mark,
     enforce_output_lineage,
-    read_mark,
+)
+from sales_data_warehouse_spark.sources.csv_ingest import (
+    CSV_OPTIONS,
+    RAW_CSV_SCHEMA,
 )
 
 
 def read_sales_csv_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
-    """All-string landing stream over a CSV drop directory.
-
-    Mirrors the batch reader: explicit all-TEXT schema (malformed rows
-    must survive to be reject-routed), header skipped per file.
-    """
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [T.StructField(c, T.StringType(), True) for c in RAW_CSV_COLUMNS]
-    )
+    """All-string landing stream over a CSV drop directory, read with
+    the batch reader's own options (``csv_ingest.CSV_OPTIONS``), so a
+    file lands as the same rows either way."""
     df = (
-        spark.readStream.schema(schema)
-        .option("header", "true")
-        .option("quote", '"')
+        spark.readStream.schema(RAW_CSV_SCHEMA)
+        .options(**CSV_OPTIONS)
         .option("maxFilesPerTrigger", 16)
         .csv(drop_dir)
     )
@@ -89,54 +84,31 @@ def etl_batch_sink(
     """Fold one landing micro-batch into the cleansed/invalid tables.
     Plain function (the ``foreachBatch`` sink calls it) so replay
     semantics are directly testable without driving a stream — see
-    :func:`start_streaming_etl` for the high-water-mark contract.
+    :func:`start_streaming_etl`.
 
-    The micro-batch is persisted once (both outputs derive from it;
-    without the persist each write re-parses the batch's CSV files —
-    two source scans per trigger) and the two appends are submitted
-    concurrently so each write's task tail back-fills with the other's
-    tasks (the run_etl write pattern). Worker threads run under
-    ``pyspark.inheritable_thread_target``, so they inherit the
-    streaming micro-batch thread's JVM-local properties — job group,
-    execution id, streaming tags — which keeps ``StreamingQuery.stop()``
-    able to cancel in-flight batch writes and the UI attribution
-    correct (r14 ADVICE: a plain thread pool dropped both).
+    Each table gets the batch's own ``batch_id=N`` partition and
+    overwrites it (cleansed partitioned by order_date inside it). The
+    micro-batch is persisted once (both outputs derive from it; without
+    the persist each write re-parses the batch's CSV files) and the two
+    writes run concurrently on the ``run_etl`` job pool, whose workers
+    inherit the micro-batch thread's job group, so
+    ``StreamingQuery.stop()`` still cancels in-flight writes.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import StorageLevel, inheritable_thread_target
-
-    def _committed(table: str) -> bool:
-        mark = read_mark(spark, f"{output_dir}/{table}/_last_batch")
-        return mark is not None and mark >= batch_id
-
-    todo = [t for t in ("cleansed", "invalid") if not _committed(t)]
-    if not todo:
-        return
+    from pyspark import StorageLevel
 
     batch_df.persist(StorageLevel.MEMORY_AND_DISK)
+    submit, pool = _job_pool(spark)
     try:
         cleansed, invalid = cleanse_stream(batch_df)
-        outputs = {"cleansed": cleansed, "invalid": invalid}
-
-        def _append(table: str) -> None:
-            writer = outputs[table].write.mode("append")
-            if table == "cleansed":
-                writer = writer.partitionBy("order_date")
-            writer.parquet(f"{output_dir}/{table}")
-            # mark AFTER the append commit: a replay that sees it knows
-            # the data landed (start_streaming_etl covers the window)
-            advance_mark(
-                spark, f"{output_dir}/{table}/_last_batch", batch_id
-            )
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            # session form: inherits JVM-local properties AND session
-            # tags (the bare-function form warns and skips tags)
-            worker = inheritable_thread_target(spark)(_append)
-            for f in [pool.submit(worker, t) for t in todo]:
-                f.result()
+        writes = [
+            submit(_write, cleansed, output_dir, "cleansed", batch_id,
+                   ["order_date"]),
+            submit(_write, invalid, output_dir, "invalid", batch_id),
+        ]
+        for f in writes:
+            f.result()
     finally:
+        pool.shutdown(wait=True)
         batch_df.unpersist()
 
 
@@ -150,28 +122,25 @@ def start_streaming_etl(
     """Continuous landing -> cleansed/invalid parquet pipeline.
 
     One source pass per micro-batch: ``foreachBatch`` applies the
-    (stateless) cleanse to the batch DataFrame and appends both outputs
+    (stateless) cleanse to the batch DataFrame and writes both outputs
     — cleansed partitioned by order_date so downstream dimension/fact
     rebuilds prune to the affected days. ``available_now=True`` drains
     pending files then stops (backfill mode); default runs forever.
 
     Returns the StreamingQuery (caller owns stop/awaitTermination).
 
-    Replay semantics: each table carries a ``_last_batch`` high-water
-    mark, advanced with ``compaction.advance_mark`` AFTER its append
-    commits, so a checkpoint replay — including a crash BETWEEN the two
-    appends — skips the table(s) that already committed instead of
-    re-appending them. The remaining at-least-once window is a crash
-    between ONE table's parquet commit and its mark advance, which
-    re-appends that one batch for that one table on replay; no earlier
-    batch can re-append.
+    Replay semantics: each table holds one ``batch_id=N`` partition per
+    micro-batch, and the sink overwrites it, so a checkpoint replay —
+    including one after a crash between the two writes — rewrites the
+    batch's own partitions and lands every row exactly once.
 
     ONE OUTPUT DIR = ONE CHECKPOINT LINEAGE
-    (``compaction.enforce_output_lineage``, r14): ``batch_id`` (and so
-    the high-water marks) are meaningful only within one checkpoint
-    lineage — a restart under a fresh checkpoint would BOTH re-append
-    every already-processed file (forgotten source offsets) and read
-    stale marks as already-committed. Refused at start instead.
+    (``compaction.enforce_output_lineage``, r14): ``batch_id`` is
+    meaningful only within one checkpoint lineage — a restart under a
+    fresh checkpoint would re-ingest every already-processed file
+    (forgotten source offsets) into batch ids that overwrite the old
+    lineage's partitions while its later ones persist. Refused at
+    start instead.
     """
     checkpoint = checkpoint_dir or f"{output_dir}/_checkpoint"
     enforce_output_lineage(

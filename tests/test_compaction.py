@@ -39,8 +39,8 @@ def test_compact_preserves_rows_and_reduces_files(spark, tmp_path):
     after = sorted(map(tuple, spark.read.parquet(path).collect()))
     assert after == before
     # tmp/old staging dirs cleaned up
-    assert not (tmp_path / "frag.compact_tmp").exists()
-    assert not (tmp_path / "frag.compact_old").exists()
+    assert not (tmp_path / "frag.stage_tmp").exists()
+    assert not (tmp_path / "frag.stage_old").exists()
 
 
 def test_compact_table_recovers_a_swap_crashed_between_renames(

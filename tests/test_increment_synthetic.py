@@ -6,8 +6,10 @@ location/product natural keys and the fact's natural keys + measures —
 while keeping every old surrogate id verbatim and numbering new ones
 from the old maximum + 1 at each level. Also pinned here: an all-invalid
 drop, the empty calendar, the job group every increment job runs
-under, plan builds that submit no job, and the crash-safe dimension
-replace.
+under, plan builds that submit no job, the crash-safe dimension
+replace, and replays: every drop lands in its own ``batch_id``
+partition, so running a drop again (after a failed fold too) leaves
+the warehouse as one clean run leaves it.
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
+import sales_data_warehouse_spark.etl as etl
 from sales_data_warehouse_spark.etl import run_etl, run_etl_increment
 from sales_data_warehouse_spark.operators.cleansing import cleanse
 from sales_data_warehouse_spark.operators.location_dimension import (
@@ -153,7 +156,12 @@ def test_natural_keys_match_full_build(spark, warehouses):
     assert _table(spark, inc, "fact", FACT_KEY) == _table(
         spark, full, "fact", FACT_KEY
     )
-    assert _table(spark, inc, "cleansed") == _table(spark, full, "cleansed")
+    # every column but the drop key (one per drop vs one for all.csv)
+    cols = [c for c in spark.read.parquet(f"{full}/cleansed").columns
+            if c != "batch_id"]
+    assert _table(spark, inc, "cleansed", cols) == _table(
+        spark, full, "cleansed", cols
+    )
     assert len(_table(spark, inc, "invalid")) == 2
 
 
@@ -282,3 +290,92 @@ def test_failed_dimension_write_keeps_the_previous_dimension(
         run_etl_increment(spark, _csv(tmp_path / "d.csv", DROPS[1]), wh)
     monkeypatch.undo()
     assert _table(spark, wh, "product_dimension") == before
+
+
+TABLES = ("cleansed", "invalid", "time_dimension", "location_dimension",
+          "product_dimension", "fact")
+
+
+def _tables(spark, wh):
+    return {t: _table(spark, wh, t) for t in TABLES}
+
+
+@pytest.fixture(scope="module")
+def folded(spark, base_wh, tmp_path_factory):
+    """The base warehouse plus the three drops, run once, fault-free;
+    returns it, the drops' directory and its tables."""
+    d = tmp_path_factory.mktemp("folded")
+    wh = shutil.copytree(base_wh, str(d / "wh"))
+    drops = d / "drops"
+    drops.mkdir()
+    for i, body in enumerate(DROPS):
+        run_etl_increment(spark, _csv(drops / f"drop_{i}.csv", body), wh)
+    return wh, drops, _tables(spark, wh)
+
+
+def test_rerunning_a_drop_leaves_every_table_unchanged(
+    spark, folded, tmp_path
+):
+    src, drops, want = folded
+    wh = shutil.copytree(src, str(tmp_path / "wh"))
+    # the price-change drop again, and then the first one
+    for i in (1, 0):
+        run_etl_increment(spark, str(drops / f"drop_{i}.csv"), wh)
+        assert _tables(spark, wh) == want
+
+
+def test_rerun_after_a_failed_fact_write_equals_a_fault_free_run(
+    spark, folded, base_wh, tmp_path, monkeypatch
+):
+    _, drops, want = folded
+    wh = shutil.copytree(base_wh, str(tmp_path / "wh"))
+    real_build_fact = etl.build_fact
+
+    def poisoned_fact(*args):
+        # the fact write fails inside its job, after the cleansed and
+        # invalid writes and the dimension merges ran
+        return real_build_fact(*args).withColumn(
+            "boom", F.raise_error(F.lit("injected write failure"))
+        )
+
+    run_etl_increment(spark, str(drops / "drop_0.csv"), wh)
+    monkeypatch.setattr(etl, "build_fact", poisoned_fact)
+    with pytest.raises(Exception, match="injected write failure"):
+        run_etl_increment(spark, str(drops / "drop_1.csv"), wh)
+    monkeypatch.undo()
+    for i in (1, 2):
+        run_etl_increment(spark, str(drops / f"drop_{i}.csv"), wh)
+    assert _tables(spark, wh) == want
+
+
+def _keys(spark, wh, table):
+    """Rows per ``batch_id`` of a table."""
+    rows = spark.read.parquet(f"{wh}/{table}").groupBy("batch_id").count()
+    return dict(map(tuple, rows.collect()))
+
+
+def test_two_csvs_with_one_file_name_both_land(spark, wh, tmp_path):
+    for sub, body in (("a", DROPS[0]), ("b", DROPS[2])):
+        (tmp_path / sub).mkdir()
+        csv = _csv(tmp_path / sub / "day.csv", body)
+        run_etl_increment(spark, csv, wh)
+    for table in ("cleansed", "fact"):
+        days = {k: n for k, n in _keys(spark, wh, table).items()
+                if k.startswith("day-")}
+        assert sorted(days.values()) == [2, 4], table
+
+
+def test_run_etl_over_a_folded_warehouse_keeps_only_its_own_rows(
+    spark, folded, tmp_path
+):
+    src, _, _ = folded
+    wh = shutil.copytree(src, str(tmp_path / "wh"))
+    all_csv = _csv(tmp_path / "all.csv", BASE, *DROPS)
+    run_etl(spark, all_csv, output_dir=wh)
+    clean = str(tmp_path / "clean")
+    run_etl(spark, all_csv, output_dir=clean)
+    assert _tables(spark, wh) == _tables(spark, clean)
+    # one partition, all.csv's own
+    for table, rows in (("cleansed", 13), ("invalid", 2), ("fact", 13)):
+        [(key, n)] = _keys(spark, wh, table).items()
+        assert key.startswith("all-") and n == rows, table

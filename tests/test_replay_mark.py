@@ -1,14 +1,17 @@
-"""One replay mark for every ``foreachBatch`` sink.
+"""One replay mark for every marked ``foreachBatch`` sink, and none for
+the ETL sink.
 
 ``compaction.advance_mark`` writes ``<mark>.tmp`` and renames it over
 the mark, so a reader sees the mark absent, old or complete, never
-torn. Each of the four marked sinks (the streaming ETL, the IVF
-appender, the weighted reservoir and the doc dedup) advances its mark
-only after its output commits. A fault at that one commit point must
-leave the previous mark readable and make the replay either equal a
-fault-free run (reservoir, doc dedup) or re-append exactly the
-interrupted batch (ETL, IVF: the at-least-once window between the
-output commit and the mark advance).
+torn. Each of the three marked sinks (the IVF appender, the weighted
+reservoir and the doc dedup) advances its mark only after its output
+commits. A fault at that one commit point must leave the previous mark
+readable and make the replay either equal a fault-free run (reservoir,
+doc dedup) or re-append exactly the interrupted batch (IVF: the
+at-least-once window between the output commit and the mark advance).
+The streaming ETL sink keeps no mark: it overwrites each batch's own
+``batch_id`` partition, so a replay after a crash between its two
+writes equals a fault-free run.
 """
 
 from __future__ import annotations
@@ -72,13 +75,10 @@ def test_failed_rename_keeps_the_previous_mark(spark, tmp_path, monkeypatch):
     assert not os.path.exists(mark + ".tmp")
 
 
-# --- the four sinks -------------------------------------------------------
+# --- the sinks -------------------------------------------------------------
 
 
 class EtlSink:
-    module = ingest
-    replay_appends = True
-
     def __init__(self, spark, root):
         self.spark, self.out = spark, f"{root}/etl"
         addr = "1 Main St, Boston, MA 02215"
@@ -96,14 +96,13 @@ class EtlSink:
     def fold(self, batch_id, batch):
         ingest.etl_batch_sink(self.spark, batch, batch_id, self.out)
 
-    def marks(self):
-        return [f"{self.out}/{t}/_last_batch" for t in ("cleansed", "invalid")]
-
     def output(self):
-        cleansed = self.spark.read.parquet(f"{self.out}/cleansed")
+        """Both tables' rows, without the ``batch_id`` partition key."""
+        read = self.spark.read.parquet
+        cleansed = read(f"{self.out}/cleansed").drop("batch_id")
         return (
             _rows(cleansed.select(*sorted(cleansed.columns))),
-            _rows(self.spark.read.parquet(f"{self.out}/invalid")),
+            _rows(read(f"{self.out}/invalid").drop("batch_id")),
         )
 
 
@@ -199,7 +198,7 @@ class DocDedupSink:
         )
 
 
-SINKS = [EtlSink, IvfSink, ReservoirSink, DocDedupSink]
+SINKS = [IvfSink, ReservoirSink, DocDedupSink]
 
 
 @pytest.mark.parametrize("fault", ["rename", "advance_mark"])
@@ -211,9 +210,9 @@ def test_fault_at_the_mark_replays_only_the_interrupted_batch(
     its rename raises after the ``.tmp`` write, or ``advance_mark``
     raises where the sink looks it up. The mark must still read 0, and
     the replay of batch 1 must match a fault-free run: identical for
-    the reservoir and the doc dedup, and for the ETL and IVF sinks the
-    same as batch 1 landing twice (the interrupted batch re-appends, no
-    earlier batch does)."""
+    the reservoir and the doc dedup, and for the IVF sink the same as
+    batch 1 landing twice (the interrupted batch re-appends, no earlier
+    batch does)."""
     sink = sink_cls(spark, str(tmp_path / "faulted"))
     b0, b1 = sink.batches
     sink.fold(0, b0)
@@ -237,6 +236,39 @@ def test_fault_at_the_mark_replays_only_the_interrupted_batch(
     twin.fold(1, b1)
     if sink.replay_appends:
         twin.fold(2, b1)
+    assert sink.output() == twin.output()
+
+
+def test_etl_sink_replay_after_a_crash_between_writes_equals_fault_free(
+    spark, tmp_path, monkeypatch
+):
+    """Batch 1's cleansed write commits, then the sink dies before it
+    can finish the batch (the writer raises once the cleansed parquet
+    is committed). The replay of batch 1 must leave exactly the rows of
+    a run without the fault."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real_parquet = DataFrameWriter.parquet
+
+    def crash_after_cleansed_commit(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        if "/cleansed" in path:
+            raise Crash()
+
+    sink = EtlSink(spark, str(tmp_path / "faulted"))
+    b0, b1 = sink.batches
+    sink.fold(0, b0)
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", crash_after_cleansed_commit
+    )
+    with pytest.raises(Crash):
+        sink.fold(1, b1)
+    monkeypatch.undo()
+    sink.fold(1, b1)  # the replay
+
+    twin = EtlSink(spark, str(tmp_path / "fault_free"))
+    twin.fold(0, b0)
+    twin.fold(1, b1)
     assert sink.output() == twin.output()
 
 

@@ -178,6 +178,32 @@ def test_cleanse_stream_reject_routing(spark, tmp_path):
     ]
 
 
+def test_stream_and_batch_readers_land_the_same_rows(spark, tmp_path):
+    """One CSV with an escaped quote (``""``) inside a quoted field, an
+    embedded comma and a blank row: the drop-directory stream and
+    ``ingest_csv`` read it into the same landing rows."""
+    from sales_data_warehouse_spark.sources.csv_ingest import ingest_csv
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "quotes.csv").write_text(
+        "Order ID,Product,Quantity Ordered,Price Each,Order Date,"
+        "Purchase Address\n"
+        '1,"27in ""4K"" Monitor",1,389.99,01/22/19 21:25,'
+        '"1 Main St, Boston, MA 02215"\n'
+        ",,,,,\n"
+        '2,Widget,2,9.99,01/23/19 09:00,"2 Elm St, Austin, TX 73301"\n'
+    )
+    streamed = _run_to_memory(
+        read_sales_csv_stream(spark, str(drop)), "t_landing", "append", spark
+    )
+    batch = ingest_csv(spark, str(drop / "quotes.csv"))
+    assert streamed.columns == batch.columns
+    got = sorted(map(tuple, streamed.collect()), key=repr)
+    assert got == sorted(map(tuple, batch.collect()), key=repr)
+    assert '27in "4K" Monitor' in {r["product"] for r in batch.collect()}
+
+
 def test_enrich_stream_matches_batch(spark, events_dir):
     batch = spark.read.schema(EVENTS_SCHEMA).parquet(events_dir)
     # static per-user profile derived from the same data
@@ -226,20 +252,21 @@ def test_streaming_etl_to_parquet(spark, tmp_path):
     invalid = spark.read.parquet(str(out / "invalid"))
     assert {r["order_id"] for r in cleansed.collect()} == {1, 2}
     assert invalid.count() == 1
-    # partitioned by order_date -> day directories exist for pruning
-    parts = {p.name for p in (out / "cleansed").iterdir() if p.is_dir()}
+    # partitioned by order_date inside each micro-batch's batch_id
+    # partition -> day directories exist for pruning
+    parts = {p.name for p in (out / "cleansed").glob("batch_id=*/*")
+             if p.is_dir()}
     assert "order_date=2019-01-22" in parts
     assert "order_date=2019-01-23" in parts
 
 
 def test_etl_batch_sink_replay_no_duplicates(spark, tmp_path):
-    """r15: the ingest sink's per-table high-water marks make a
-    checkpoint replay idempotent — including the crash-between-appends
-    window (one table committed, the other not): the restart must
-    re-append ONLY the missing table, never duplicate the committed
-    one."""
+    """The ingest sink overwrites each batch's own ``batch_id``
+    partition, so a checkpoint replay is idempotent — including the
+    crash-between-writes window (one table committed, the other not):
+    the restart rewrites the batch and never duplicates the committed
+    table."""
     import sales_data_warehouse_spark.streaming.ingest as ing
-    from sales_data_warehouse_spark.sources.compaction import fs_read_text
     from sales_data_warehouse_spark.sources.csv_ingest import (
         landing_from_rows,
     )
@@ -270,13 +297,13 @@ def test_etl_batch_sink_replay_no_duplicates(spark, tmp_path):
     )
     assert counts() == (1, 1)
 
-    # full-batch replay (restart after crash between appends and the
-    # checkpoint offset commit): both tables marked -> no-op
+    # full-batch replay (restart after a crash between the writes and
+    # the checkpoint offset commit): both partitions rewritten
     ing.etl_batch_sink(spark, batch0, 0, out)
     assert counts() == (1, 1)
 
-    # crash BETWEEN the two appends: the invalid append of batch 1
-    # fails after the cleansed append committed (a runtime error
+    # crash BETWEEN the two writes: the invalid write of batch 1
+    # fails after the cleansed write committed (a runtime error
     # injected into the invalid plan only)
     real = ing.cleanse_stream
 
@@ -291,10 +318,9 @@ def test_etl_batch_sink_replay_no_duplicates(spark, tmp_path):
     finally:
         ing.cleanse_stream = real
     assert counts() == (2, 1)  # cleansed committed, invalid did not
-    assert fs_read_text(spark, f"{out}/cleansed/_last_batch") == "1"
-    assert fs_read_text(spark, f"{out}/invalid/_last_batch") == "0"
 
-    # the replay after restart: re-appends ONLY the missing table
+    # the replay after restart: the committed table is rewritten, the
+    # missing one lands
     ing.etl_batch_sink(spark, batch1, 1, out)
     assert counts() == (2, 2)
     cleansed = spark.read.parquet(f"{out}/cleansed")

@@ -1,16 +1,18 @@
-"""start_streaming_dimensions: two files drained through two separate
+"""start_streaming_warehouse: two files drained through two separate
 availableNow queries (same checkpoint — a real restart) must yield the
-same dimensions as the batch pipeline over the full CSV."""
+same dimensions as the batch pipeline over the full CSV, and the same
+warehouse as ``run_etl`` + ``run_etl_increment`` over the same files."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
 
-from sales_data_warehouse_spark.etl import run_etl
+from sales_data_warehouse_spark.etl import run_etl, run_etl_increment
 from sales_data_warehouse_spark.streaming.dimensions import (
-    start_streaming_dimensions,
+    start_streaming_warehouse,
 )
 from tests.conftest import REFERENCE_CSV
 
@@ -52,7 +54,7 @@ def test_streaming_dimensions_match_batch(spark, tmp_path):
 
     # micro-batch 1: first half
     shutil.copy(f1, drop / "batch1.csv")
-    q = start_streaming_dimensions(spark, str(drop), wh, available_now=True)
+    q = start_streaming_warehouse(spark, str(drop), wh, available_now=True)
     q.awaitTermination()
 
     mid_products = spark.read.parquet(f"{wh}/product_dimension").count()
@@ -60,7 +62,7 @@ def test_streaming_dimensions_match_batch(spark, tmp_path):
     # micro-batch 2 through a RESTARTED query on the same checkpoint:
     # only the new file is processed, and the merges fold it in
     shutil.copy(f2, drop / "batch2.csv")
-    q = start_streaming_dimensions(spark, str(drop), wh, available_now=True)
+    q = start_streaming_warehouse(spark, str(drop), wh, available_now=True)
     q.awaitTermination()
 
     time_dim = spark.read.parquet(f"{wh}/time_dimension")
@@ -109,7 +111,7 @@ def test_streaming_dimensions_match_batch(spark, tmp_path):
     import pytest
 
     with pytest.raises(ValueError, match="lineage"):
-        start_streaming_dimensions(
+        start_streaming_warehouse(
             spark,
             str(drop),
             wh,
@@ -124,10 +126,6 @@ def test_streaming_warehouse_fact_matches_batch(spark, tmp_path):
     import shutil as _sh
 
     from pyspark.sql import functions as F
-
-    from sales_data_warehouse_spark.streaming.dimensions import (
-        start_streaming_warehouse,
-    )
 
     f1, f2 = _split_csv(tmp_path)
     drop = tmp_path / "wdrop"
@@ -179,22 +177,20 @@ def test_streaming_warehouse_fact_matches_batch(spark, tmp_path):
         )
 
 
-@pytest.mark.parametrize("with_fact", [False, True])
-def test_inline_drops_match_batch(spark, tmp_path, with_fact):
-    """Both dimension sinks on two inline-CSV micro-batches (a restarted
-    query on one checkpoint), no reference CSV needed: the time
-    dimension equals ``run_etl`` over the same rows bit for bit, the
-    product and location dimensions hold the same natural keys, and the
-    warehouse sink's fact carries the same natural keys + measures."""
+@pytest.mark.parametrize("restart", [False, True])
+def test_inline_drops_match_batch(spark, tmp_path, restart):
+    """The warehouse sink on two inline-CSV micro-batches, no reference
+    CSV needed: with ``restart``, each drop is drained by its own
+    availableNow query on one checkpoint; without, one long-running
+    query folds both drops as they land. Against
+    ``run_etl`` over all the rows: the time dimension bit for bit, the
+    product and location natural keys, and the fact's natural keys +
+    measures. Against ``run_etl`` + ``run_etl_increment`` over the same
+    two files (the same fold, drop by drop): every dimension row for
+    row, surrogate ids included, and the fact on every column but the
+    drop key."""
     from tests.test_increment_synthetic import BASE, DROPS, HEADER
 
-    from sales_data_warehouse_spark.streaming.dimensions import (
-        start_streaming_warehouse,
-    )
-
-    start = start_streaming_warehouse if with_fact else (
-        start_streaming_dimensions
-    )
     bodies = [BASE, DROPS[0] + DROPS[1]]
     full_csv = tmp_path / "all.csv"
     full_csv.write_text(HEADER + "\n" + "".join(bodies))
@@ -203,9 +199,28 @@ def test_inline_drops_match_batch(spark, tmp_path, with_fact):
     drop = tmp_path / "drop"
     drop.mkdir()
     wh = str(tmp_path / "wh")
-    for i, body in enumerate(bodies):
-        (drop / f"b{i}.csv").write_text(HEADER + "\n" + body)
-        start(spark, str(drop), wh, available_now=True).awaitTermination()
+    folded = str(tmp_path / "folded")
+    staging = tmp_path / "staging"
+    staging.mkdir()
+    live = None if restart else start_streaming_warehouse(spark, str(drop), wh)
+    try:
+        for i, body in enumerate(bodies):
+            # land each drop whole: the running query may list the
+            # directory at any moment
+            staged = staging / f"b{i}.csv"
+            staged.write_text(HEADER + "\n" + body)
+            csv = drop / staged.name
+            os.replace(staged, csv)
+            if live is None:
+                start_streaming_warehouse(
+                    spark, str(drop), wh, available_now=True
+                ).awaitTermination()
+            else:
+                live.processAllAvailable()
+            (run_etl_increment if i else run_etl)(spark, str(csv), folded)
+    finally:
+        if live is not None:
+            live.stop()
 
     def rows(df, cols=None):
         return sorted(map(tuple, (df.select(*cols) if cols else df).collect()))
@@ -221,7 +236,14 @@ def test_inline_drops_match_batch(spark, tmp_path, with_fact):
         full.location_dimension, lkey
     )
     assert read(f"{wh}/cleansed").select("batch_id").distinct().count() == 2
-    if with_fact:
-        cols = ["product", "order_date", "street_name", "postal",
-                "quantity_ordered", "price_each"]
-        assert rows(read(f"{wh}/fact"), cols) == rows(full.fact, cols)
+    cols = ["product", "order_date", "street_name", "postal",
+            "quantity_ordered", "price_each"]
+    assert rows(read(f"{wh}/fact"), cols) == rows(full.fact, cols)
+
+    for name in ("time_dimension", "location_dimension",
+                 "product_dimension"):
+        assert rows(read(f"{wh}/{name}")) == rows(
+            read(f"{folded}/{name}")
+        ), name
+    fact = read(f"{folded}/fact").drop("batch_id")
+    assert rows(read(f"{wh}/fact"), fact.columns) == rows(fact)
