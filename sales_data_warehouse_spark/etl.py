@@ -1,9 +1,13 @@
 """End-to-end ETL orchestrator — the reference's ``etl(filepath)``.
 
 Reference: ``MotherProcedure.sql:2-25`` calls import -> cleansing ->
-location -> time -> product -> fact in order. Here each stage is a pure
-DataFrame function; materialization points (parquet writes) mirror the
-reference's table boundaries so any stage can be re-run independently.
+location -> time -> product -> fact in order and rebuilds every table on
+each run. Here each stage is a pure DataFrame function, and one fold
+(``_fold``) writes the warehouse: it merges a drop of cleansed rows into
+each dimension and writes the drop's own ``batch_id`` partition of
+cleansed, invalid and the fact. ``run_etl_increment`` folds in one CSV,
+the warehouse stream one micro-batch, and a full refresh (``run_etl``
+with ``output_dir``) folds its CSV into an emptied warehouse.
 """
 
 from __future__ import annotations
@@ -29,6 +33,12 @@ from sales_data_warehouse_spark.operators.time_dimension import (
     build_time_dimension,
     merge_time_dimension,
 )
+from sales_data_warehouse_spark.schemas import (
+    LOCATION_DIMENSION_SCHEMA,
+    PRODUCT_DIMENSION_SCHEMA,
+    TIME_DIMENSION_SCHEMA,
+    empty_frame,
+)
 from sales_data_warehouse_spark.sources.compaction import (
     fs_delete,
     fs_exists,
@@ -37,7 +47,6 @@ from sales_data_warehouse_spark.sources.compaction import (
     staged_overwrite,
 )
 from sales_data_warehouse_spark.sources.csv_ingest import ingest_csv
-from sales_data_warehouse_spark.sources.parquet_io import write_table
 
 log = logging.getLogger(__name__)
 
@@ -105,7 +114,10 @@ def _write(
     else:
         if key is not None:
             path = f"{path}/batch_id={key}"
-        write_table(df, path, partition_by=partition_by)
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
 
 
 def _drop_key(spark: SparkSession, path: str) -> str:
@@ -129,89 +141,29 @@ def run_etl(
 
     ``dense=False`` keeps the sparse fact as primary (SURVEY §4); pass
     ``dense=True`` to materialize the reference's cube semantics.
-    When ``output_dir`` is set, each stage is written as parquet (the
-    fact partitioned by month for partition pruning on time slices).
-    cleansed, invalid and the fact land in the CSV's own ``batch_id``
-    partition (``_drop_key``), the layout ``run_etl_increment`` and the
-    warehouse stream add their drops to; a full refresh first clears
-    every earlier drop.
+    When ``output_dir`` is set, the warehouse is rebuilt there like the
+    reference's ``etl()`` rebuilds every table: all six tables are
+    cleared (with any staged swap a crashed fold left behind) and the
+    CSV is folded into the empty warehouse by ``_fold`` under its key
+    (``_drop_key``) — the same fold ``run_etl_increment`` and the
+    warehouse stream add their drops with. The result frames read the
+    written tables; cleansed and the fact read the CSV's own partition.
     """
-    from pyspark import StorageLevel
-
     landing = ingest_csv(spark, csv_path)
-    # Persist the parsed CSV when we materialize outputs here: the
-    # cleansed and invalid branches (plus the max-id subplan) each
-    # consume landing, and without a persist every branch re-parses the
-    # file — the invalid write alone re-ran the full ingest+cleanse
-    # (measured 0.58 s of a 3.56 s run on the reference CSV).
-    # MEMORY_AND_DISK spills rather than OOMs at 100 TB; released once
-    # both outputs are written. Without output_dir the consumers are
-    # the CALLER's lazy actions and nothing here could unpersist
-    # afterwards — persisting would pin the parsed CSV for the
-    # application lifetime, so that mode keeps the rescan behavior.
-    if output_dir:
-        landing = landing.persist(StorageLevel.MEMORY_AND_DISK)
     cleansed, invalid = cleanse(landing)
     if output_dir:
-        # Dependency DAG of the writes (see _job_pool for the overlap):
-        #   * cleansed write — everything downstream needs its parquet;
-        #   * invalid write — a LEAF: nothing reads it, so it overlaps
-        #     the dimension builds AND the fact build (its only shared
-        #     input is the cached landing; concurrent materialization of
-        #     the same cached partitions is safe — the block manager
-        #     computes each missing block once, the other job waits on
-        #     the block lock);
-        #   * the three dimension writes run at once;
-        #   * the fact write, after all three.
         key = _drop_key(spark, csv_path)
-        for name in ("cleansed", "invalid", "fact"):
-            fs_delete(spark, f"{output_dir}/{name}")
-        submit, pool = _job_pool(spark)
-        try:
-            f_cleansed = submit(_write, cleansed, output_dir, "cleansed", key)
-            f_invalid = submit(_write, invalid, output_dir, "invalid", key)
-            f_cleansed.result()
-            cleansed = spark.read.parquet(
-                f"{output_dir}/cleansed/batch_id={key}"
-            )
-            # Write each dimension BEFORE the fact build and re-read it
-            # from parquet: the fact (and dense cube) otherwise
-            # re-executes every dimension's window pipeline once per
-            # downstream action.
-            dim_futures = [
-                submit(_write, builder(cleansed), output_dir, name)
-                for builder, name in [
-                    (build_time_dimension, "time_dimension"),
-                    (build_location_dimension, "location_dimension"),
-                    (build_product_dimension, "product_dimension"),
-                ]
-            ]
-            for f in dim_futures:
-                f.result()
-            time_dim = spark.read.parquet(f"{output_dir}/time_dimension")
-            loc_dim = spark.read.parquet(f"{output_dir}/location_dimension")
-            prod_dim = spark.read.parquet(
-                f"{output_dir}/product_dimension"
-            )
-            fact = build_fact(cleansed, prod_dim, loc_dim, time_dim)
-            if dense:
-                fact = dense_fact(fact, prod_dim, loc_dim, time_dim)
-            submit(
-                _write, fact, output_dir, "fact", key, ["month_id"]
-            ).result()
-            fact = spark.read.parquet(f"{output_dir}/fact/batch_id={key}")
-            # the one remaining landing consumer — surfacing its error
-            # (if any) before this function reports success
-            f_invalid.result()
-        finally:
-            # also reached on a failed write: without the unpersist the
-            # cached parsed CSV stayed pinned (MEMORY_AND_DISK) for the
-            # application lifetime (r14 ADVICE). shutdown(wait=True)
-            # first so no in-flight job still computes landing blocks.
-            # Blocking=False: eviction is async, the returned landing
-            # plan stays valid (recomputes if re-used).
-            pool.shutdown(wait=True)
-            landing.unpersist()
+        for name in _TABLES:
+            for suffix in ("", ".stage_tmp", ".stage_old"):
+                fs_delete(spark, f"{output_dir}/{name}{suffix}")
+        _fold(spark, landing, cleansed, invalid, output_dir, key, dense)
+        cleansed = spark.read.parquet(f"{output_dir}/cleansed/batch_id={key}")
+        time_dim, loc_dim, prod_dim = (
+            spark.read.parquet(f"{output_dir}/{name}")
+            for name in ("time_dimension", "location_dimension",
+                         "product_dimension")
+        )
+        fact = spark.read.parquet(f"{output_dir}/fact/batch_id={key}")
     else:
         cleansed = cleansed.cache()
         time_dim = build_time_dimension(cleansed)
@@ -246,21 +198,25 @@ def register_views(spark: SparkSession, result: EtlResult) -> None:
     result.fact.createOrReplaceTempView("fact_table")
 
 
+_TABLES = ("cleansed", "invalid", "time_dimension", "location_dimension",
+           "product_dimension", "fact")
+
 _DIMENSIONS = (
-    ("location_dimension", build_location_dimension, merge_location_dimension),
-    ("product_dimension", build_product_dimension, merge_product_dimension),
-    ("time_dimension", build_time_dimension, merge_time_dimension),
+    ("location_dimension", merge_location_dimension, LOCATION_DIMENSION_SCHEMA),
+    ("product_dimension", merge_product_dimension, PRODUCT_DIMENSION_SCHEMA),
+    ("time_dimension", merge_time_dimension, TIME_DIMENSION_SCHEMA),
 )
 
 
-def _materialize(name: str, fold, *inputs: DataFrame) -> DataFrame:
-    """One dimension built or merged, materialized: ``localCheckpoint``
+def _materialize(
+    name: str, merge, prior: DataFrame, cleansed: DataFrame
+) -> DataFrame:
+    """One dimension merged, materialized: ``localCheckpoint``
     computes its rows once for both consumers (the fact build and the
     dimension replace) and cuts the plan loose from the prior parquet
     that the replace swaps out."""
-    spark = inputs[0].sparkSession
-    spark.sparkContext.setJobDescription(f"etl: merge {name}")
-    return fold(*inputs).localCheckpoint()
+    cleansed.sparkSession.sparkContext.setJobDescription(f"etl: merge {name}")
+    return merge(prior, cleansed).localCheckpoint()
 
 
 def _fold(
@@ -270,6 +226,7 @@ def _fold(
     invalid: DataFrame,
     output_dir: str,
     key: str | int,
+    dense: bool = False,
 ) -> dict[str, DataFrame]:
     """Fold one drop of cleansed rows into the warehouse at
     ``output_dir``; returns the folded dimensions. Every warehouse sink
@@ -282,8 +239,9 @@ def _fold(
       * cleansed, invalid and the fact overwrite their
         ``batch_id=<key>`` partition (the fact month-partitioned inside
         it, ``fact/batch_id=<key>/month_id=M``, so time slices prune);
-      * each dimension is built from the drop where it is absent and
-        merged into otherwise. The merges are append-stable and
+      * each dimension's merge folds the drop into its table, or into
+        an empty dimension where the table is absent (the first fold,
+        and every fold of ``run_etl``). The merges are append-stable and
         idempotent: existing ids stay verbatim, new keys are numbered
         past the max, time ids are pure date functions, and merging
         rows the dimension holds already changes nothing. A swap that
@@ -291,13 +249,16 @@ def _fold(
         each merged dimension is swapped in crash-safely
         (``staged_overwrite``), so a failed fold never loses one.
 
+    ``dense=True`` writes the reference's dense cube as the drop's fact
+    (``dense_fact``) in place of the sparse fact.
+
     The merges make no driver round-trips: the id offsets and the
     calendar's range are 1-row aggregates inside their plans. The fold
     runs as a dependency DAG on the ``run_etl`` job pool (the reference
     runs its stages one after another, ``MotherProcedure.sql:7-22``):
 
       1. the cleansed and invalid writes and the three
-         build/merge + ``localCheckpoint`` steps are submitted at once
+         merge + ``localCheckpoint`` steps are submitted at once
          (``landing`` and ``cleansed``, which five jobs read, are
          persisted and released in a ``finally``);
       2. once the dimensions are done, their three replaces and the
@@ -316,24 +277,26 @@ def _fold(
             submit(_write, invalid, output_dir, "invalid", key),
         ]
         folds = {}
-        for name, build, merge in _DIMENSIONS:
+        for name, merge, schema in _DIMENSIONS:
             path = f"{output_dir}/{name}"
             # restore a swap that crashed between its renames first: a
             # dimension found missing would be rebuilt from this drop
             # alone, losing its history
             recover_staged(spark, path)
-            if fs_exists(spark, path):
-                inputs = (merge, spark.read.parquet(path), cleansed)
-            else:
-                inputs = (build, cleansed)
-            folds[name] = submit(_materialize, name, *inputs)
+            prior = (
+                spark.read.parquet(path) if fs_exists(spark, path)
+                else empty_frame(spark, schema)
+            )
+            folds[name] = submit(_materialize, name, merge, prior, cleansed)
         dims = {name: f.result() for name, f in folds.items()}
-        fact = build_fact(
-            cleansed,
+        star = (
             dims["product_dimension"],
             dims["location_dimension"],
             dims["time_dimension"],
         )
+        fact = build_fact(cleansed, *star)
+        if dense:
+            fact = dense_fact(fact, *star)
         writes += [
             submit(_write, dim, output_dir, name, replace=True)
             for name, dim in dims.items()

@@ -6,22 +6,16 @@ probes three staging tables per row, inserting first-seen keys with
 link columns (:137-147), then a 3-way join + ROW_NUMBER produces
 ``location_dimension`` (:150-180).
 
-Spark-first: each level is one ``dropDuplicates`` on its natural key plus
-one ``row_number`` window for ids (SURVEY J11/A3/W2). Quirk Q8 is
-load-bearing and replicated: the state level is keyed on (state, postal),
-so multi-zip states produce one row per zip. Quirk Q7 (scan-order ids) is
-rationalized to a deterministic natural-key ordering.
-
-Scale note: unlike time (bounded by the calendar) and product (bounded
-by the catalog), this dimension grows with the *data* — distinct
-addresses are ~1:1 with order volume, so the default reference-parity
-``row_number`` ids (single-partition window) stop scaling exactly when
-the input does. ``id_strategy="hash"`` switches every level id to
-``xxhash64`` of the natural key: fully parallel, stable across runs and
-partitionings, and — because a hash id is a pure function of the row —
-the 3-way hierarchy join disappears entirely (each level id is computed
-in place on the street-grain row). That is the 100 TB path; sequential
-stays the default for reference-format parity (``L000001``-style ids).
+Spark-first: one merge numbers every level (SURVEY J11/A3/W2). An
+anti-join finds the unseen addresses; a level key the dimension already
+holds keeps its id, and new keys are numbered past the level's maximum
+in natural-key order (``dense_rank`` for states and cities,
+``row_number`` for streets and locations), so no hierarchy join remains.
+A full build is the merge into an empty dimension. Quirk Q8 is
+load-bearing and replicated: the state level is keyed on (state,
+postal), so multi-zip states produce one row per zip. Quirk Q7
+(scan-order ids) is rationalized to a deterministic natural-key
+ordering.
 """
 
 from __future__ import annotations
@@ -30,27 +24,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sales_data_warehouse_spark.functions.expressions import padded_id
-
-
-def _hash_location_dimension(addr: DataFrame) -> DataFrame:
-    """Hash-id variant: one dropDuplicates, zero joins, zero windows."""
-    uniq = addr.dropDuplicates()
-    return uniq.select(
-        F.xxhash64("street", "city", "state", "postal").alias("location_id"),
-        F.xxhash64("street", "city", "state", "postal").alias("street_id"),
-        F.col("street").alias("street_name"),
-        F.xxhash64("city", "state", "postal").alias("city_id"),
-        F.col("city").alias("city_name"),
-        F.xxhash64("state", "postal").alias("state_id"),
-        F.col("state").alias("state_name"),
-        "postal",
-        F.concat_ws(
-            ", ",
-            F.col("street"),
-            F.col("city"),
-            F.concat_ws(" ", "state", "postal"),
-        ).alias("full_address"),
-    )
+from sales_data_warehouse_spark.schemas import (
+    LOCATION_DIMENSION_SCHEMA,
+    empty_frame,
+)
 
 
 def merge_location_dimension(
@@ -65,9 +42,7 @@ def merge_location_dimension(
     sorts before an old one — fine for the reference's drop-and-rebuild
     model, fatal for any consumer that stored location_id. The merge
     works at dimension scale only (row_number over *new* keys), never
-    rescanning old facts. (With ``id_strategy="hash"`` ids are pure
-    functions of the key, so "merge" degenerates to union+distinct and
-    this function is unnecessary.)
+    rescanning old facts.
     """
     new_addr = cleansed_new.select(
         "street", "city", "state", "postal"
@@ -182,74 +157,10 @@ def merge_location_dimension(
     return existing.unionByName(appended)
 
 
-def build_location_dimension(
-    cleansed: DataFrame, id_strategy: str = "sequential"
-) -> DataFrame:
-    addr = cleansed.select("street", "city", "state", "postal")
-    if id_strategy == "hash":
-        return _hash_location_dimension(addr)
-    if id_strategy != "sequential":
-        raise ValueError(f"id_strategy must be sequential|hash: {id_strategy}")
-
-    # Level ids: deterministic first-seen order = natural-key order (Q7).
-    state = (
-        addr.select("state", "postal")
-        .dropDuplicates()
-        .withColumn(
-            "state_id",
-            padded_id(
-                "SA", F.row_number().over(Window.orderBy("state", "postal")), 3
-            ),
-        )
-    )
-    city = (
-        addr.select("city", "state", "postal")
-        .dropDuplicates()
-        .withColumn(
-            "city_id",
-            padded_id(
-                "C",
-                F.row_number().over(Window.orderBy("city", "state", "postal")),
-                3,
-            ),
-        )
-    )
-    street = (
-        addr.dropDuplicates()
-        .withColumn(
-            "street_id",
-            padded_id(
-                "S",
-                F.row_number().over(
-                    Window.orderBy("street", "city", "state", "postal")
-                ),
-                6,
-            ),
-        )
-    )
-
-    # 3-way hierarchy assembly (J2); city/state levels are tiny -> broadcast.
-    joined = (
-        street.join(F.broadcast(city), on=["city", "state", "postal"], how="inner")
-        .join(F.broadcast(state), on=["state", "postal"], how="inner")
-    )
-
-    return joined.select(
-        padded_id(
-            "L",
-            F.row_number().over(
-                Window.orderBy("street_id", "city_id", "state_id")
-            ),
-            6,
-        ).alias("location_id"),
-        "street_id",
-        F.col("street").alias("street_name"),
-        "city_id",
-        F.col("city").alias("city_name"),
-        "state_id",
-        F.col("state").alias("state_name"),
-        "postal",
-        F.concat_ws(
-            ", ", F.col("street"), F.col("city"), F.concat_ws(" ", "state", "postal")
-        ).alias("full_address"),
+def build_location_dimension(cleansed: DataFrame) -> DataFrame:
+    """The dimension of ``cleansed`` alone: its merge into an empty
+    dimension, so a full build numbers every level exactly as the first
+    fold into an empty warehouse does."""
+    return merge_location_dimension(
+        empty_frame(cleansed.sparkSession, LOCATION_DIMENSION_SCHEMA), cleansed
     )

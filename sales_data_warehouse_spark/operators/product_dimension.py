@@ -14,8 +14,12 @@ Spark-first rationalization (documented in SURVEY Q4-Q6):
   * active_status = 'Y' only for the latest version per product.
   * action_flag   = 'I' for a product's first version, 'U' for later ones
     (replaces the hard-coded '2019-01-01' check).
-  * product_id    = dense_rank over product_name (same id across versions,
-    as in the reference after its renumbering pass).
+  * product_id    = one id per product_name, shared by its versions (as
+    in the reference after its renumbering pass): names new to the
+    dimension are ranked by name and numbered past its product count.
+
+One merge derives all of it; a full build is the merge into an empty
+dimension, which ranks every name.
 """
 
 from __future__ import annotations
@@ -24,16 +28,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sales_data_warehouse_spark.functions.expressions import padded_id
-
-
-def build_product_dimension(cleansed: DataFrame) -> DataFrame:
-    # all_products, rationalized per Q4: first sale date per price version.
-    versions = (
-        cleansed.groupBy("product", "price_each")
-        .agg(F.min("order_date").alias("last_update_date"))
-        .withColumnRenamed("product", "product_name")
-    )
-    return _dim_from_versions(versions)
+from sales_data_warehouse_spark.schemas import (
+    PRODUCT_DIMENSION_SCHEMA,
+    empty_frame,
+)
 
 
 def merge_product_dimension(
@@ -63,8 +61,8 @@ def merge_product_dimension(
         .groupBy("product_name", "price_each")
         .agg(F.min("last_update_date").alias("last_update_date"))
     )
-    # Append-stable ids: the full build's dense_rank renumbers everything
-    # when a new product sorts before an old one; consumers (fact rows)
+    # Append-stable ids: a dense_rank over every name would renumber
+    # them when a new product sorts before an old one; consumers (fact rows)
     # that stored product_id need existing ids kept verbatim and new
     # products numbered past the current max.
     # The existing product count is a 1-row aggregate broadcast into the
@@ -90,14 +88,17 @@ def merge_product_dimension(
     )
 
 
-def _dim_from_versions(
-    versions: DataFrame, id_map: DataFrame | None = None
-) -> DataFrame:
-    """Status/flag/id derivation shared by full build and merge.
+def build_product_dimension(cleansed: DataFrame) -> DataFrame:
+    """The dimension of ``cleansed`` alone: its merge into an empty
+    dimension."""
+    return merge_product_dimension(
+        empty_frame(cleansed.sparkSession, PRODUCT_DIMENSION_SCHEMA), cleansed
+    )
 
-    ``id_map`` (product_name -> product_id) overrides the default
-    dense_rank numbering — used by the incremental merge to keep ids
-    append-stable."""
+
+def _dim_from_versions(versions: DataFrame, id_map: DataFrame) -> DataFrame:
+    """Status and flags of each version, and its product's id from
+    ``id_map`` (product_name -> product_id)."""
     w_ver = Window.partitionBy("product_name").orderBy(
         "last_update_date", "price_each"
     )
@@ -117,16 +118,7 @@ def _dim_from_versions(
             F.when(F.col("_ver") == 1, F.lit("I")).otherwise(F.lit("U")),
         )
     )
-    if id_map is None:
-        dim = dim.withColumn(
-            "product_id",
-            padded_id(
-                "P", F.dense_rank().over(Window.orderBy("product_name")), 6
-            ),
-        )
-    else:
-        dim = dim.join(F.broadcast(id_map), "product_name", "inner")
-    return dim.select(
+    return dim.join(F.broadcast(id_map), "product_name", "inner").select(
         "product_id",
         "product_name",
         "price_each",

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sales_data_warehouse_spark.schemas import TIME_DIMENSION_SCHEMA, empty_frame
+
 
 def _calendar(dates: DataFrame) -> DataFrame:
     """Every day in [min(d), max(d)] of a one-column frame of dates ``d``
@@ -46,10 +48,13 @@ def _calendar(dates: DataFrame) -> DataFrame:
 def build_time_dimension(cleansed: DataFrame) -> DataFrame:
     """Calendar covering [min(order_date), max(order_date)] inclusive
     (reference ``TimeDimension.sql:45-50``) — on the reference CSV that
-    yields 32 days (2019-01-01..2019-02-01). A ``cleansed`` frame with
-    no rows yields an empty dimension.
+    yields 32 days (2019-01-01..2019-02-01): the merge into an empty
+    dimension. A ``cleansed`` frame with no rows yields an empty
+    dimension.
     """
-    return _calendar(cleansed.select(F.col("order_date").alias("d")))
+    return merge_time_dimension(
+        empty_frame(cleansed.sparkSession, TIME_DIMENSION_SCHEMA), cleansed
+    )
 
 
 def merge_time_dimension(

@@ -9,6 +9,7 @@ boundary (all-string, mirroring the reference's all-TEXT staging,
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 #: Raw CSV columns in file order (reference ``Sales_January_2019.csv`` header).
@@ -130,3 +131,11 @@ FACT_SCHEMA = T.StructType(
         T.StructField("postal", T.StringType(), True),
     ]
 )
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A table of ``schema`` with no rows, in a plan Catalyst knows is
+    empty: ``limit(0)`` optimizes to an empty ``LocalRelation`` of size
+    0, where the bare ``createDataFrame([], schema)`` is an RDD scan of
+    unknown size that a join against it would shuffle."""
+    return spark.createDataFrame([], schema).limit(0)

@@ -1,4 +1,3 @@
 from sales_data_warehouse_spark.sources.csv_ingest import ingest_csv
-from sales_data_warehouse_spark.sources.parquet_io import read_table, write_table
 
-__all__ = ["ingest_csv", "read_table", "write_table"]
+__all__ = ["ingest_csv"]

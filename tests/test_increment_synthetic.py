@@ -9,7 +9,8 @@ drop, the empty calendar, the job group every increment job runs
 under, plan builds that submit no job, the crash-safe dimension
 replace, and replays: every drop lands in its own ``batch_id``
 partition, so running a drop again (after a failed fold too) leaves
-the warehouse as one clean run leaves it.
+the warehouse as one clean run leaves it, and a full refresh does not
+revive a swap that crashed.
 """
 
 from __future__ import annotations
@@ -24,9 +25,11 @@ import sales_data_warehouse_spark.etl as etl
 from sales_data_warehouse_spark.etl import run_etl, run_etl_increment
 from sales_data_warehouse_spark.operators.cleansing import cleanse
 from sales_data_warehouse_spark.operators.location_dimension import (
+    build_location_dimension,
     merge_location_dimension,
 )
 from sales_data_warehouse_spark.operators.product_dimension import (
+    build_product_dimension,
     merge_product_dimension,
 )
 from sales_data_warehouse_spark.operators.time_dimension import (
@@ -262,6 +265,8 @@ def test_building_the_merges_submits_no_job(spark, base_wh, tmp_path):
         merge_location_dimension(prior["location_dimension"], cleansed)
         merge_product_dimension(prior["product_dimension"], cleansed)
         merge_time_dimension(prior["time_dimension"], cleansed)
+        build_location_dimension(cleansed)
+        build_product_dimension(cleansed)
         build_time_dimension(cleansed)
     finally:
         _clear_job_group(spark)
@@ -379,3 +384,21 @@ def test_run_etl_over_a_folded_warehouse_keeps_only_its_own_rows(
     for table, rows in (("cleansed", 13), ("invalid", 2), ("fact", 13)):
         [(key, n)] = _keys(spark, wh, table).items()
         assert key.startswith("all-") and n == rows, table
+
+
+def test_full_refresh_does_not_revive_a_crashed_swap(spark, wh, tmp_path):
+    # a location swap that crashed before its old copy was deleted, its
+    # old copy holding a street no run of this CSV writes, and a staged
+    # product table that was never swapped in
+    loc = spark.read.parquet(f"{wh}/location_dimension")
+    extra = loc.limit(1).withColumn("street_name", F.lit("99 Gone St"))
+    loc.unionByName(extra).write.parquet(f"{wh}/location_dimension.stage_old")
+    spark.read.parquet(f"{wh}/product_dimension").write.parquet(
+        f"{wh}/product_dimension.stage_tmp"
+    )
+    all_csv = _csv(tmp_path / "all.csv", BASE, *DROPS)
+    run_etl(spark, all_csv, output_dir=wh)
+    clean = str(tmp_path / "clean")
+    run_etl(spark, all_csv, output_dir=clean)
+    assert _tables(spark, wh) == _tables(spark, clean)
+    assert not list((tmp_path / "wh").glob("*.stage_*"))

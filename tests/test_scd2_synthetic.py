@@ -10,7 +10,7 @@ from decimal import Decimal
 
 import pytest
 
-from sales_data_warehouse_spark.etl import run_etl
+from sales_data_warehouse_spark.etl import _drop_key, run_etl
 from sales_data_warehouse_spark.operators.fact import dense_fact
 
 CSV = """Order ID,Product,Quantity Ordered,Price Each,Order Date,Purchase Address
@@ -84,3 +84,18 @@ def test_dense_cube_keys_on_price_version(etl):
     # conservation: dense cube preserves total quantity
     total = sum(r["quantity_ordered"] for r in dense.collect())
     assert total == 1 + 2 + 1 + 3 + 4
+
+
+def test_written_dense_fact_is_the_cube(spark, etl, tmp_path):
+    csv = tmp_path / "sales.csv"
+    csv.write_text(CSV)
+    wh = str(tmp_path / "wh")
+    run_etl(spark, str(csv), output_dir=wh, dense=True)
+    key = _drop_key(spark, str(csv))
+    fact = spark.read.parquet(f"{wh}/fact/batch_id={key}")
+    # 21 days x 3 product-versions x 2 locations
+    assert fact.count() == 21 * 3 * 2
+    qty = "sum(quantity_ordered)"
+    assert fact.agg({"quantity_ordered": "sum"}).first()[qty] == (
+        etl.fact.agg({"quantity_ordered": "sum"}).first()[qty]
+    )
