@@ -22,6 +22,31 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from sales_data_warehouse_spark.queries.corpus import QUERIES  # noqa: E402
 from sales_data_warehouse_spark.session import get_spark  # noqa: E402
 
+
+def time_row(runs: int, run, setup=None, cleanup=None) -> float:
+    """Min over ``runs`` of ``run(state)``'s wall seconds, rounded to
+    the millisecond. ``state = setup()`` is made before the clock starts
+    and ``cleanup(state)`` runs after it stops, also when ``run``
+    raises, so per-run temp dirs and prebuilt plans stay outside the
+    timed region."""
+    best = float("inf")
+    for _ in range(runs):
+        state = setup() if setup else None
+        try:
+            t0 = time.perf_counter()
+            run(state)
+            best = min(best, time.perf_counter() - t0)
+        finally:
+            if cleanup:
+                cleanup(state)
+    return round(best, 3)
+
+
+def _noop(df) -> None:
+    """Materialize ``df`` through the noop sink."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 #: Headline set: one per operator family, weighted toward the shapes that
 #: dominate at 100 TB (scan-agg, big joins, windows, dedup, ANN).
 HEADLINE = [
@@ -302,14 +327,9 @@ def _sf1_block(spark, sf_dir: str, sf: float) -> dict[str, float]:
     # divided by is a warm min — which inflated scale ratios (r4 found
     # join_composite_key reported 13.15x where the warm ratio is ~8x).
     for name in SF1_SET:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf1_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 3)
+        out[name] = time_row(
+            2, lambda _: _noop(QUERIES[name](spark, sf1_dir))
+        )
 
     # the exact-pair entries above are O(n^2) BY DESIGN (all-pairs
     # cosine / exact top-k); the approximate path is what must scale —
@@ -328,17 +348,17 @@ def _sf1_block(spark, sf_dir: str, sf: float) -> dict[str, float]:
     # up to 28 s for the first call late in a long bench session) while
     # its base twin was a warm min — the resulting 20-27x "ratio" was
     # measurement protocol, not scaling.
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        _similarity.lsh_topk(
-            emb10,
-            emb10.filter(_SF.col("vec_id") < 10),
-            k=5,
-            probe_hamming=3,
-        ).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    out["op_lsh_topk"] = round(best, 3)
+    out["op_lsh_topk"] = time_row(
+        2,
+        lambda _: _noop(
+            _similarity.lsh_topk(
+                emb10,
+                emb10.filter(_SF.col("vec_id") < 10),
+                k=5,
+                probe_hamming=3,
+            )
+        ),
+    )
 
     # Bucketed-write path for the repeated-read composite join
     # (join_composite_key's 100 TB answer): pay the composite-key
@@ -364,8 +384,8 @@ def _sf1_block(spark, sf_dir: str, sf: float) -> dict[str, float]:
     out["join_composite_key_bucket_write"] = round(
         time.perf_counter() - t0, 3
     )
-    best = float("inf")
-    for _ in range(2):
+
+    def _bucketed_plan():
         lb = read_bucketed(spark, "bench_lineitem_bucketed")
         opb = lb.groupBy("l_orderkey", "l_partkey").agg(
             _SF.count(_SF.lit(1)).alias("n_lines"),
@@ -373,7 +393,7 @@ def _sf1_block(spark, sf_dir: str, sf: float) -> dict[str, float]:
             .cast("double")
             .alias("total_qty"),
         )
-        plan = (
+        return (
             lb.join(opb, on=["l_orderkey", "l_partkey"])
             .filter(_SF.col("n_lines") > 1)
             .select(
@@ -384,10 +404,11 @@ def _sf1_block(spark, sf_dir: str, sf: float) -> dict[str, float]:
                 "total_qty",
             )
         )
-        t0 = time.perf_counter()
-        plan.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    out["join_composite_key_bucketed"] = round(best, 3)
+
+    # the plan is built per run, outside the timed region
+    out["join_composite_key_bucketed"] = time_row(
+        2, _noop, setup=_bucketed_plan
+    )
 
     # additive scaling evidence for the round-4 text/dedup ops: these
     # are not HEADLINE queries (the headline total must stay
@@ -451,12 +472,7 @@ def _sf1_block(spark, sf_dir: str, sf: float) -> dict[str, float]:
     for name, make in extra_builders.items():
         times = {}
         for tag, d in (("base", sf_dir), ("x10", sf1_dir)):
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                make(d).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            times[tag] = round(best, 3)
+            times[tag] = time_row(2, lambda _: _noop(make(d)))
         times["ratio"] = (
             round(times["x10"] / times["base"], 2) if times["base"] else -1
         )
@@ -636,13 +652,9 @@ def main() -> None:
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     timings: dict[str, float] = {}
     for name in HEADLINE + BASE_EXTRA:
-        fn = QUERIES[name]
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+        timings[name] = time_row(
+            runs, lambda _: _noop(QUERIES[name](spark, sf_dir))
+        )
 
     # Raw-operator timings: the dedup/ANN corpus entries are
     # property-oracle queries (they also compute the exact truth set to
@@ -668,12 +680,7 @@ def main() -> None:
         ),
     }
     for name, make in op_benches.items():
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            make().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+        timings[name] = time_row(runs, lambda _: _noop(make()))
 
     # End-to-end ETL signals (reference CSV -> parquet warehouse), so ETL
     # regressions show up here, not just query regressions. The write is
@@ -697,37 +704,45 @@ def main() -> None:
 
     csv = "/root/reference/Sales_January_2019.csv"
     if os.path.exists(csv):
+        def _rmtree(*dirs) -> None:
+            for d in dirs:
+                shutil.rmtree(d, ignore_errors=True)
+
         for key, dense in [("run_etl", False), ("dense_fact", True)]:
-            best = float("inf")
-            for _ in range(runs):
-                out = tempfile.mkdtemp(prefix="sdw_bench_")
-                try:
-                    t0 = time.perf_counter()
-                    run_etl(spark, csv, output_dir=out, dense=dense)
-                    best = min(best, time.perf_counter() - t0)
-                finally:
-                    shutil.rmtree(out, ignore_errors=True)
-            timings[key] = round(best, 3)
+            timings[key] = time_row(
+                runs,
+                lambda out: run_etl(
+                    spark, csv, output_dir=out, dense=dense
+                ),
+                setup=lambda: tempfile.mkdtemp(prefix="sdw_bench_"),
+                cleanup=_rmtree,
+            )
 
         # Streaming ETL drain: the same CSV through the foreachBatch
         # cleansed/invalid sink with an availableNow trigger — the
         # Structured-Streaming path gets a perf signal too.
         from sales_data_warehouse_spark.streaming import start_streaming_etl
 
-        best = float("inf")
-        for _ in range(runs):
-            drop = tempfile.mkdtemp(prefix="sdw_bench_drop_")
-            out = tempfile.mkdtemp(prefix="sdw_bench_stream_")
+        def _drop_and_out():
+            dirs = (
+                tempfile.mkdtemp(prefix="sdw_bench_drop_"),
+                tempfile.mkdtemp(prefix="sdw_bench_stream_"),
+            )
             try:
-                shutil.copy(csv, drop)
-                t0 = time.perf_counter()
-                q = start_streaming_etl(spark, drop, out, available_now=True)
-                q.awaitTermination()
-                best = min(best, time.perf_counter() - t0)
-            finally:
-                shutil.rmtree(drop, ignore_errors=True)
-                shutil.rmtree(out, ignore_errors=True)
-        timings["streaming_etl"] = round(best, 3)
+                shutil.copy(csv, dirs[0])
+            except BaseException:
+                _rmtree(*dirs)
+                raise
+            return dirs
+
+        timings["streaming_etl"] = time_row(
+            runs,
+            lambda dirs: start_streaming_etl(
+                spark, *dirs, available_now=True
+            ).awaitTermination(),
+            setup=_drop_and_out,
+            cleanup=lambda dirs: _rmtree(*dirs),
+        )
 
         # 50x-scaled ETL: the reference CSV's data rows replicated with
         # disjoint order-id ranges (defect rows — blanks, repeated

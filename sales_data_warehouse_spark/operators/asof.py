@@ -1,5 +1,5 @@
-"""Reusable as-of (point-in-time) join — three physical plans, one
-semantics.
+"""Reusable as-of (point-in-time) join — one semantics, two physical
+plans.
 
 Reference: ``FactTable.sql:18-27`` does this with a correlated scalar
 subquery per fact row (``ORDER BY last_update_date DESC LIMIT 1``) —
@@ -9,18 +9,18 @@ provides:
 * :func:`asof_join` — broadcast non-equi join + ``max_by`` top-1
   reduction (map-side partial aggregation, SURVEY J8/W3). Wins while
   the versioned side fits in a broadcast.
-* :func:`asof_join_grouped` (default ``engine='union'``) — pure-JVM
-  union-tag + running ``last(ignorenulls)`` window: one co-keyed
-  shuffle + sort, no Python, the plan that survives both sides huge
-  (r7; SURVEY J8 option (b)). ``engine='cogroup'`` keeps the pandas
-  ``merge_asof`` verification twin.
+* :func:`asof_join_grouped` — pure-JVM union-tag + running
+  ``last(ignorenulls)`` window: one co-keyed shuffle + sort, no
+  Python, the plan that survives both sides huge (r7; SURVEY J8
+  option (b)).
 * :func:`asof_join_auto` — routes between the two by the versioned
   side's size estimate (``session.fits_broadcast``).
 
-All plans support three directions (backward/forward/nearest, with
+Both plans support three directions (backward/forward/nearest, with
 pandas merge_asof's prefer-backward tie rule), ``tolerance`` (bounded
 staleness) and ``allow_exact_matches`` (strict bounds with fallback),
-verified bit-identical against each other and a DuckDB oracle.
+verified bit-identical against each other, a pandas ``merge_asof``
+oracle (``tests/test_asof_grouped.py``) and a DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -82,7 +82,7 @@ def _ts_micros(col: F.Column, dtype: T.DataType) -> F.Column:
         # keep integral keys exact: casting to double loses precision
         # above 2^53, which can misresolve 'nearest' near-ties,
         # allow_exact_matches equality, tolerance bounds, and the union
-        # engine's sort order (r7 ADVICE). Consumers only need a
+        # plan's sort order (r7 ADVICE). Consumers only need a
         # consistent orderable number — bigint is one.
         return col.cast("bigint")
     if isinstance(dtype, T.DecimalType) and dtype.scale == 0:
@@ -135,17 +135,17 @@ def _warn_mixed_numeric_keys(
 ) -> None:
     """Warn on mixed-family as-of key types (r8 brief #8 + r9 review):
 
-    * integral vs fractional — the engines compare both sides in the
+    * integral vs fractional — both plans compare the two sides in the
       :func:`_ts_micros` number domain, and a bigint-vs-double (or
       decimal(38,0)-vs-double) comparison widens to DOUBLE, so the
       integral side's exactness quietly degrades above 2^53 —
       'nearest' near-ties, ``allow_exact_matches`` equality, tolerance
-      bounds, and the union engine's sort order can all misresolve;
+      bounds, and the union plan's sort order can all misresolve;
     * numeric vs temporal — the temporal side becomes epoch
       MICROseconds while the numeric side stays raw, so the two sides
       are compared in mismatched units (epoch-seconds vs a timestamp
-      is off by 10^6): the grouped engines construct the plan and
-      produce silently wrong-or-empty matches (the broadcast plan
+      is off by 10^6): the grouped plan constructs and produces
+      silently wrong-or-empty matches (the broadcast plan
       compares raw columns, so Catalyst refuses DATE-vs-BIGINT at
       analysis — there the warning explains the failure). This is
       the worse bug and was previously undiagnosed.
@@ -206,9 +206,7 @@ def asof_join(
     right_ts: str,
     *,
     direction: str = "backward",
-    broadcast_right: bool = True,
     unique_left: bool = False,
-    envelope_prefilter: bool = False,
     tolerance=None,
     allow_exact_matches: bool = True,
 ) -> DataFrame:
@@ -220,9 +218,7 @@ def asof_join(
     agree), matching on equality of ``on`` keys.
 
     'nearest' requires a date/timestamp or numeric ts column (it
-    subtracts them) and cannot use ``envelope_prefilter`` (no version
-    is provably unreachable: a far-away version is still some row's
-    nearest when it is the only one).
+    subtracts them).
 
     Left rows with no qualifying right row are dropped (inner semantics,
     matching the reference's correlated-subquery inner join).
@@ -243,19 +239,10 @@ def asof_join(
     in a broadcast (1.75 s at 600 k facts -> 1.98 s at 6 M on the
     pricing oracle, BENCH_full_r06). Past the broadcast limit, where
     ``session.fits_broadcast`` says no, use :func:`asof_join_grouped`:
-    since round 7 its default union engine is pure JVM (one co-keyed
-    shuffle + sort + running-last window, ~1.8 s warm on the same
-    oracle at sf0.1, vs the retired pandas-cogroup default's flat
-    ~26 s Arrow tax) and stays bounded by the largest single key.
-
-    ``envelope_prefilter=True`` prunes right-side versions that cannot
-    match ANY left row before the join: for backward joins, versions
-    effective after the left's global max ``left_ts`` (for forward,
-    before the global min). Costs one tiny left-side min/max aggregate
-    broadcast into the filter. Worth it when the versioned side's
-    history extends past the fact window (e.g. pricing a January batch
-    against a multi-year price list); a no-op when versions already sit
-    inside the envelope.
+    since round 7 it is pure JVM (one co-keyed shuffle + sort +
+    running-last window, ~1.8 s warm on the same oracle at sf0.1, vs
+    the retired pandas-cogroup plan's flat ~26 s Arrow tax) and stays
+    bounded by the largest single key.
 
     ``tolerance`` (round 7; pandas merge_asof's knob) bounds how far a
     match may sit from the fact row: a ``datetime.timedelta`` for
@@ -265,37 +252,16 @@ def asof_join(
     facts. ``allow_exact_matches=False`` makes the directional bound
     strict (``<`` / ``>``) and excludes same-instant versions from
     'nearest' — the lookup-must-strictly-precede contract of leakage-
-    safe feature joins. Both knobs are honored identically by all
-    three physical plans (tested in ``tests/test_asof_grouped.py``);
-    tolerance additionally tightens this plan's join condition, so it
-    PRUNES candidates rather than adding work.
+    safe feature joins. Both knobs are honored identically by both
+    physical plans and the pandas oracle (tested in
+    ``tests/test_asof_grouped.py``); tolerance additionally tightens
+    this plan's join condition, so it PRUNES candidates rather than
+    adding work.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
             f"direction must be backward|forward|nearest: {direction}"
         )
-    if direction == "nearest" and envelope_prefilter:
-        raise ValueError(
-            "asof_join: envelope_prefilter cannot prune for "
-            "direction='nearest' — every version is reachable"
-        )
-
-    if envelope_prefilter:
-        # 1-row aggregate broadcast into a theta-join filter: prunes
-        # versions outside the left's reachable time envelope before
-        # the broadcast build. Backward can only bound from above (an
-        # arbitrarily old version may still be some row's as-of match);
-        # forward only from below.
-        if direction == "backward":
-            bound = left.agg(F.max(left_ts).alias("__env"))
-            keep = F.col(right_ts) <= F.col("__env")
-        else:
-            bound = left.agg(F.min(left_ts).alias("__env"))
-            keep = F.col(right_ts) >= F.col("__env")
-        right = (
-            right.join(F.broadcast(bound), keep, "inner").drop("__env")
-        )
-
     lid = "__asof_left_id"
     if unique_left:
         lft = left
@@ -303,7 +269,6 @@ def asof_join(
     else:
         lft = left.withColumn(lid, F.monotonically_increasing_id())
         group_keys = [F.col(f"l.{lid}")]
-    rgt = F.broadcast(right) if broadcast_right else right
 
     _warn_mixed_numeric_keys(
         left.schema[left_ts].dataType, right.schema[right_ts].dataType
@@ -337,8 +302,7 @@ def asof_join(
         # versions-per-key, same bound as the directional joins' worst
         # case. The NULL guards keep the inner contract the directional
         # joins get for free from their ts inequality: a NULL-ts left
-        # row must DROP, not emit NULL right columns (and the grouped
-        # cogroup plan's merge_asof outright errors on null merge keys).
+        # row must DROP, not emit NULL right columns.
         cond = (
             F.col(f"l.{left_ts}").isNotNull()
             & F.col(f"r.{right_ts}").isNotNull()
@@ -350,7 +314,9 @@ def asof_join(
     for k in on:
         cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
 
-    joined = lft.alias("l").join(rgt.alias("r"), cond, "inner")
+    joined = lft.alias("l").join(
+        F.broadcast(right).alias("r"), cond, "inner"
+    )
 
     # Top-1-per-left-row via max_by/min_by instead of a window: the
     # grouped aggregate gets map-side partial aggregation (each task
@@ -397,21 +363,19 @@ def asof_join_auto(
     unique_left: bool = False,
     tolerance=None,
     allow_exact_matches: bool = True,
-    envelope_prefilter: bool = False,
 ) -> DataFrame:
     """Route to the right physical as-of plan by the versioned side's
     size: when ``right`` fits a broadcast (``session.fits_broadcast``:
     the optimizer's size estimate with a decompression margin, at or
     under ``spark.sql.autoBroadcastJoinThreshold``), the broadcast +
     ``max_by`` plan (1.8-2.0 s on the pricing oracle); otherwise
-    :func:`asof_join_grouped`'s pure-JVM union engine (one co-keyed
+    :func:`asof_join_grouped`'s pure-JVM union plan (one co-keyed
     shuffle + sort, the shape that survives both sides huge).
 
     The probe reads plan statistics only and submits no job; an
-    unreadable estimate picks the union engine. ``unique_left`` and
-    ``envelope_prefilter`` apply only on the broadcast route (the union
-    engine neither groups by a row id nor builds a candidate set to
-    prune).
+    unreadable estimate picks the union plan. ``unique_left`` applies
+    only on the broadcast route (the union plan does not group by a
+    row id).
     """
     if fits_broadcast(right):
         return asof_join(
@@ -420,12 +384,10 @@ def asof_join_auto(
             unique_left=unique_left,
             tolerance=tolerance,
             allow_exact_matches=allow_exact_matches,
-            envelope_prefilter=envelope_prefilter,
         )
     return asof_join_grouped(
         left, right, on, left_ts, right_ts,
         direction=direction,
-        engine="union",
         tolerance=tolerance,
         allow_exact_matches=allow_exact_matches,
     )
@@ -439,156 +401,20 @@ def asof_join_grouped(
     right_ts: str,
     *,
     direction: str = "backward",
-    engine: str = "union",
     tolerance=None,
     allow_exact_matches: bool = True,
 ) -> DataFrame:
     """As-of join for when NEITHER side broadcasts (billion-row versioned
-    side). Default ``engine='union'`` is a PURE-JVM plan (round 7,
-    SURVEY §2 J8 option (b)): union-tag both sides into one relation
-    keyed on the ``on`` columns, sort each key group once on the
-    timestamp, and carry the most recent version forward with
-    ``last(..., ignorenulls=True)`` over a running row frame — ONE
-    shuffle on the keys plus an in-partition sort, no Python anywhere.
-    State per window frame is a single right-side struct, so the plan
-    scales with the largest key's row count (sort) and never
+    side): a PURE-JVM plan (round 7, SURVEY §2 J8 option (b)). Union-tag
+    both sides (left rows carry a NULL right-struct, right rows a NULL
+    left-struct), shuffle ONCE on the ``on`` keys, sort each key group
+    by (ts, side) and carry the latest right struct forward with
+    ``last(ignorenulls=True)`` over a running row frame — no Python
+    anywhere. State per window frame is a single right-side struct, so
+    the plan scales with the largest key's row count (sort) and never
     materializes the join candidates the broadcast plan's max_by
     reduces. The same semantics as :func:`asof_join` (inner: left rows
-    with no qualifying version are dropped; NULL-ts rows on either side
-    drop) for all three directions — 'nearest' runs the forward and
-    backward running windows over the same shuffle (one exchange, two
-    sorts) and picks the smaller distance, preferring the backward
-    version on equidistant ties (pandas merge_asof's rule, so all three
-    physical plans agree).
-
-    ``engine='cogroup'`` keeps the round-4 verification twin: cogroup
-    both sides by the ``on`` keys and run ``pandas.merge_asof`` per key
-    group in Arrow batches. Measured on the same pricing oracle
-    (BENCH_full_r06) it costs a FLAT ~26.6 s at 600 k facts and 26.8 s
-    at 6 M — the cost is per-group Python/Arrow invocation over the
-    constant ~20 k keys, not data volume — which is why it is no longer
-    the default. It remains the independent implementation the parity
-    tests (tests/test_asof_grouped.py) check the union plan against.
-    The cogroup engine additionally requires the ``on`` + ts columns to
-    have distinct names across sides and errors on NULL merge keys
-    (the union engine drops them, matching :func:`asof_join`).
-
-    Ties on ``right_ts`` within a key pick an arbitrary version under
-    both engines — the same contract as the reference's
-    ``ORDER BY ... LIMIT 1`` (FactTable.sql:25-26).
-
-    Crossover vs :func:`asof_join`: broadcast + ``max_by`` wins while
-    the versioned side fits in a broadcast (~1.8-2.0 s on the pricing
-    oracle); reach for this plan past the broadcast limit, where
-    ``session.fits_broadcast`` says no (about 9 M rows of the pricing
-    oracle's price list at the 32 MiB default threshold). The union
-    engine's cost is one co-keyed shuffle + sort of left+right, the
-    same shape as any co-partitioned join, so it stays cheap on the
-    whole curve instead of paying the cogroup engine's flat Arrow tax.
-
-    Timezone parity note: the union engine orders on the same
-    timezone-independent integer microseconds as the broadcast plan
-    (``_ts_micros``), so it is immune to session-timezone skew. The
-    cogroup engine receives session-LOCAL naive timestamps from Arrow
-    for ``TimestampType``; the repo pins
-    ``spark.sql.session.timeZone=UTC``, under which all plans are
-    bit-identical in all three directions (tested). ``DateType``
-    columns are immune everywhere — exact day arithmetic.
-    """
-    if direction not in ("backward", "forward", "nearest"):
-        raise ValueError(
-            f"direction must be backward|forward|nearest: {direction}"
-        )
-    # warn HERE, not inside the engine plans: covers both engines (the
-    # cogroup path pays the same 2^53/unit-mismatch hazards in pandas)
-    # and keeps the stacklevel-3 attribution at the USER'S call line
-    _warn_mixed_numeric_keys(
-        left.schema[left_ts].dataType, right.schema[right_ts].dataType
-    )
-    if engine == "union":
-        return _asof_union_plan(
-            left, right, on, left_ts, right_ts, direction,
-            tolerance=tolerance, allow_exact_matches=allow_exact_matches,
-        )
-    if engine != "cogroup":
-        raise ValueError(f"engine must be union|cogroup: {engine}")
-    # fail on a bad tolerance here, not inside the Arrow workers
-    _tolerance_in_ts_units(tolerance, left.schema[left_ts].dataType)
-
-    import pandas as pd
-
-    right_cols = [c for c in right.columns if c not in on]
-    out_fields = list(left.schema.fields) + [
-        right.schema[c] for c in right_cols
-    ]
-    out_schema = T.StructType(out_fields)
-    left_names = list(left.columns)
-    l_ts, r_ts, dirn = left_ts, right_ts, direction
-    tol_arg, exact_arg = tolerance, allow_exact_matches
-
-    l_is_date = isinstance(left.schema[left_ts].dataType, T.DateType)
-    r_is_date = isinstance(right.schema[right_ts].dataType, T.DateType)
-
-    def merge(l_pdf: "pd.DataFrame", r_pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if not len(l_pdf) or not len(r_pdf):
-            return pd.DataFrame(columns=left_names + right_cols)
-        ls = l_pdf.copy()
-        rs = r_pdf[[r_ts] + [c for c in right_cols if c != r_ts]].copy()
-        # DateType arrives as object-dtype datetime.date; merge_asof
-        # needs an ordered numeric/datetime64 key
-        if l_is_date:
-            ls[l_ts] = pd.to_datetime(ls[l_ts])
-        if r_is_date:
-            rs[r_ts] = pd.to_datetime(rs[r_ts])
-        ls = ls.sort_values(l_ts, kind="mergesort")
-        rs = rs.sort_values(r_ts, kind="mergesort")
-        merged = pd.merge_asof(
-            ls,
-            rs,
-            left_on=l_ts,
-            right_on=r_ts,
-            direction=dirn,
-            suffixes=("", "__r"),
-            # merge_asof takes these natively; a date key was already
-            # promoted to datetime64 above, so a timedelta tolerance
-            # applies to both temporal families
-            tolerance=tol_arg,
-            allow_exact_matches=exact_arg,
-        )
-        # inner semantics: drop left rows with no qualifying version
-        r_ts_out = r_ts if r_ts != l_ts else f"{r_ts}__r"
-        merged = merged[merged[r_ts_out].notna()]
-        if l_is_date:
-            merged[l_ts] = merged[l_ts].dt.date
-        if r_is_date:
-            merged[r_ts_out] = merged[r_ts_out].dt.date
-        return merged[left_names + right_cols]
-
-    return (
-        left.groupBy(*on)
-        .cogroup(right.groupBy(*on))
-        .applyInPandas(merge, schema=out_schema)
-    )
-
-
-def _asof_union_plan(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str,
-    right_ts: str,
-    direction: str,
-    tolerance=None,
-    allow_exact_matches: bool = True,
-) -> DataFrame:
-    """Pure-JVM both-sides-huge as-of join (SURVEY §2 J8 option (b)).
-
-    Union-tag both sides (left rows carry a NULL right-struct, right
-    rows a NULL left-struct), shuffle ONCE on the ``on`` keys, sort each
-    key group by (ts, side) and carry the latest right struct forward
-    with ``last(ignorenulls=True)`` over a running row frame. The
-    reference computes the same relation with a correlated
-    ``ORDER BY ... LIMIT 1`` subquery per fact row (FactTable.sql:18-27).
+    with no qualifying version are dropped) for all three directions.
 
     Sort-order details that carry the semantics:
     * right rows sort BEFORE left rows at equal ts (``__lft`` 0 < 1), so
@@ -607,14 +433,32 @@ def _asof_union_plan(
     * 'nearest' evaluates both windows over ONE exchange (the second
       window adds only a sort) and picks the smaller integer-micros
       distance, preferring backward on equidistant ties — pandas
-      merge_asof's rule, so all three physical plans agree;
+      merge_asof's rule, so both physical plans agree;
     * NULL-ts rows on either side are filtered up front: a NULL-ts fact
       must DROP (inner contract) and a NULL-ts version can never be
       anyone's match.
 
-    The running frame means per-row state is one struct, not the
-    versions-per-key candidate set, and nothing here leaves the JVM.
+    Ties on ``right_ts`` within a key pick an arbitrary version — the
+    same contract as the reference's ``ORDER BY ... LIMIT 1``
+    (FactTable.sql:25-26). The plan orders on the same
+    timezone-independent integer microseconds as the broadcast plan
+    (``_ts_micros``), so it is immune to session-timezone skew.
+
+    Crossover vs :func:`asof_join`: broadcast + ``max_by`` wins while
+    the versioned side fits in a broadcast (~1.8-2.0 s on the pricing
+    oracle); reach for this plan past the broadcast limit, where
+    ``session.fits_broadcast`` says no (about 9 M rows of the pricing
+    oracle's price list at the 32 MiB default threshold). Its cost is
+    one co-keyed shuffle + sort of left+right, the same shape as any
+    co-partitioned join.
     """
+    if direction not in ("backward", "forward", "nearest"):
+        raise ValueError(
+            f"direction must be backward|forward|nearest: {direction}"
+        )
+    _warn_mixed_numeric_keys(
+        left.schema[left_ts].dataType, right.schema[right_ts].dataType
+    )
     right_cols = [c for c in right.columns if c not in on]
     l_struct_t = T.StructType(
         [T.StructField(f.name, f.dataType, True) for f in left.schema.fields]
@@ -626,7 +470,6 @@ def _asof_union_plan(
         ]
     )
 
-    # mixed-key warning fires in asof_join_grouped (both engines)
     l_num = _ts_micros(F.col(left_ts), left.schema[left_ts].dataType)
     r_num = _ts_micros(F.col(right_ts), right.schema[right_ts].dataType)
 

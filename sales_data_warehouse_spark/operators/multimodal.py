@@ -4,8 +4,9 @@ Images/audio/video ride Spark as ``binary`` columns with a metadata struct;
 decode / feature-extract run as Arrow-batched pandas functions over
 ``mapInPandas`` — the Spark-side plumbing (schema, batching, partition
 shape) is real and tested, while the actual codec calls are STUBBED
-(``decode_image_stub``) because no image/audio libraries exist in this
-environment. Swap the stub body for PIL/torchvision/ffmpeg calls in a real
+(deterministic fake geometry from the payload length, inside
+:func:`decode_batch`) because no image/audio libraries exist in this
+environment. Swap the stub for PIL/torchvision/ffmpeg calls in a real
 deployment; nothing else changes.
 """
 
@@ -29,21 +30,6 @@ DECODED_SCHEMA = T.StructType(
         T.StructField("n_frames", T.LongType()),
     ]
 )
-
-
-def decode_image_stub(payload: bytes) -> tuple[int, int, int]:
-    """STUB decoder: deterministic fake geometry from the payload bytes.
-
-    A real deployment replaces this body with e.g.::
-
-        img = PIL.Image.open(io.BytesIO(payload))
-        return img.width, img.height, getattr(img, "n_frames", 1)
-
-    (PIL is not available in this container — the surrounding Spark
-    plumbing is what this module tests.)
-    """
-    n = len(payload)
-    return n % 640, (n * 7) % 480, 1 + n % 3
 
 
 def attach_binary_payload(
@@ -73,7 +59,7 @@ def decode_batch(
     """
 
     # NOTE: the worker-side closure must be self-contained (builtins +
-    # pandas only). Referencing module globals (e.g. decode_image_stub)
+    # pandas only). Referencing module globals (e.g. a decoder helper)
     # would make cloudpickle serialize them *by module reference*, and
     # executors that don't have this package on PYTHONPATH would fail
     # with ModuleNotFoundError. Same rule a real cluster deployment
@@ -86,8 +72,8 @@ def decode_batch(
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(payload)
                 n = len(b)
-                # keep in sync with decode_image_stub (inlined for the
-                # self-containment rule above)
+                # STUB geometry; a real decoder would read it from e.g.
+                # PIL.Image.open(io.BytesIO(b)).width/.height/.n_frames
                 out.append((doc_id, n, n % 640, (n * 7) % 480, 1 + n % 3))
             yield _pd.DataFrame(
                 out, columns=["doc_id", "n_bytes", "width", "height", "n_frames"]

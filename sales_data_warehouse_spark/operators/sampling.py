@@ -80,8 +80,8 @@ def mixture_interleave(
 
     Scale shape: a plain ``row_number over (partition by source)`` caps
     parallelism at the NUMBER OF SOURCES — a mixture of 3 corpora would
-    rank 100 TB on 3 tasks. Instead the rank is computed two-phase
-    (the ``ids.zip_index_id`` trick, per source): range-partition by
+    rank 100 TB on 3 tasks. Instead the rank is computed two-phase,
+    per source: range-partition by
     (source, doc_id) so each source's rows are doc_id-ordered across
     partitions, take a per-(partition, source) local row_number (window
     parallelism = partition count), and add the source's exclusive
@@ -960,17 +960,14 @@ def load_importance_model(spark, path: str) -> ImportanceModel:
     """Reopen a saved model; the score table stays a lazy parquet scan
     (broadcast at score time in hashed mode). Calls
     ``recover_staged`` on the model directory first (the save stages
-    the scores+stats pair as one swap), then on both parts for models
-    last saved by the pre-r13 per-part staging — so a save that
-    crashed mid-swap reopens the intact previous generation instead of
-    failing on a missing directory."""
+    the scores+stats pair as one swap), so a save that crashed
+    mid-swap reopens the intact previous generation instead of failing
+    on a missing directory."""
     from sales_data_warehouse_spark.sources.compaction import (
         recover_staged,
     )
 
     recover_staged(spark, path)
-    recover_staged(spark, f"{path}/scores")
-    recover_staged(spark, f"{path}/stats")
     row = spark.read.parquet(f"{path}/stats").collect()[0]
     return ImportanceModel(
         spark.read.parquet(f"{path}/scores"),

@@ -50,10 +50,6 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-
-
 def _rowwise_cosine(qv: Column, cv: Column) -> Column:
     """Arrow-batched exact cosine for already-materialized candidate
     pairs — the rerank kernel for LSH/IVF. Sequential-order float64

@@ -1950,16 +1950,12 @@ def load_text_index(spark, path: str) -> TextIndex:
     search's pbucket filter becomes partition pruning. Calls
     ``recover_staged`` on the index directory first (the
     whole-directory save stages the PAIR as one swap) so a save that
-    crashed mid-swap reopens the intact previous generation — and on
-    both parts for indexes last saved by the per-part staging of
-    releases before the r13 atomic-pair fix."""
+    crashed mid-swap reopens the intact previous generation."""
     from sales_data_warehouse_spark.sources.compaction import (
         recover_staged,
     )
 
     recover_staged(spark, path)
-    recover_staged(spark, f"{path}/postings")
-    recover_staged(spark, f"{path}/stats")
     row = spark.read.parquet(f"{path}/stats").collect()[0]
     return TextIndex(
         spark.read.parquet(f"{path}/postings"),
@@ -2279,16 +2275,13 @@ def load_phrase_index(spark, path: str) -> PhraseIndex:
     """Reopen a saved index; the postings stay a lazy partitioned scan
     and the id column name comes from the persisted stats. Calls
     ``recover_staged`` on the index directory first (the save stages
-    the pair as one swap), then on both parts for indexes last saved
-    by the pre-r13 per-part staging
-    (``load_importance_model``'s contract)."""
+    the pair as one swap), so a save that crashed mid-swap reopens the
+    intact previous generation."""
     from sales_data_warehouse_spark.sources.compaction import (
         recover_staged,
     )
 
     recover_staged(spark, path)
-    recover_staged(spark, f"{path}/postings")
-    recover_staged(spark, f"{path}/stats")
     row = spark.read.parquet(f"{path}/stats").collect()[0]
     return PhraseIndex(
         spark.read.parquet(f"{path}/postings"), row["id_col"]

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import math
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -46,6 +47,23 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     HDFS/object-store URIs where ``os.path.exists`` is always False."""
     fs, hpath, _ = _hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
+
+
+def fs_stamp(spark: SparkSession, path: str) -> tuple[int, int] | None:
+    """``path``'s (modification time, length) from its file system, or
+    None where no stamp can vouch for the contents: a missing path, or
+    a store that reports modification time 0 (object-store
+    directories)."""
+    fs, hpath, _ = _hadoop_fs(spark, path)
+    try:
+        status = fs.getFileStatus(hpath)
+    except Py4JJavaError as e:
+        name = e.java_exception.getClass().getName()
+        if name == "java.io.FileNotFoundException":
+            return None
+        raise
+    mtime = status.getModificationTime()
+    return None if mtime == 0 else (int(mtime), int(status.getLen()))
 
 
 def fs_qualify(spark: SparkSession, path: str) -> str:

@@ -1,17 +1,101 @@
-"""The cogroup/merge_asof as-of variant must agree with the broadcast
-join+max_by variant on the same inputs (both directions)."""
+"""The as-of plans must agree with each other and with an independent
+pandas ``merge_asof`` oracle on the same inputs (all directions)."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sales_data_warehouse_spark.operators.asof import (
+    _warn_mixed_numeric_keys,
     asof_join,
     asof_join_grouped,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
+
+
+def cogroup_asof(
+    left: DataFrame,
+    right: DataFrame,
+    on: list[str],
+    left_ts: str,
+    right_ts: str,
+    *,
+    direction: str = "backward",
+    tolerance=None,
+    allow_exact_matches: bool = True,
+) -> DataFrame:
+    """Test oracle for the as-of plans: cogroup both sides by the ``on``
+    keys and run ``pandas.merge_asof`` per key group in Arrow batches.
+    pandas implements direction, ``tolerance`` and
+    ``allow_exact_matches`` natively, so it checks the plans' semantics
+    independently. It costs a flat ~26 s on the pricing oracle at both
+    600 k and 6 M facts (BENCH_full_r06): the cost is per-group Python
+    over the ~20 k keys, not data volume.
+
+    Requires the ``on`` + ts columns to have distinct names across
+    sides and errors on NULL merge keys (the plans drop them). Arrow
+    hands ``TimestampType`` over as session-LOCAL naive timestamps; the
+    suite pins ``spark.sql.session.timeZone=UTC``, under which it
+    agrees with the plans in all three directions. ``DateType`` is
+    exact day arithmetic everywhere."""
+    import pandas as pd
+
+    _warn_mixed_numeric_keys(
+        left.schema[left_ts].dataType, right.schema[right_ts].dataType
+    )
+    right_cols = [c for c in right.columns if c not in on]
+    out_schema = T.StructType(
+        list(left.schema.fields) + [right.schema[c] for c in right_cols]
+    )
+    left_names = list(left.columns)
+    l_is_date = isinstance(left.schema[left_ts].dataType, T.DateType)
+    r_is_date = isinstance(right.schema[right_ts].dataType, T.DateType)
+
+    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
+        if not len(l_pdf) or not len(r_pdf):
+            return pd.DataFrame(columns=left_names + right_cols)
+        ls = l_pdf.copy()
+        rs = r_pdf[
+            [right_ts] + [c for c in right_cols if c != right_ts]
+        ].copy()
+        # DateType arrives as object-dtype datetime.date; merge_asof
+        # needs an ordered numeric/datetime64 key
+        if l_is_date:
+            ls[left_ts] = pd.to_datetime(ls[left_ts])
+        if r_is_date:
+            rs[right_ts] = pd.to_datetime(rs[right_ts])
+        ls = ls.sort_values(left_ts, kind="mergesort")
+        rs = rs.sort_values(right_ts, kind="mergesort")
+        merged = pd.merge_asof(
+            ls,
+            rs,
+            left_on=left_ts,
+            right_on=right_ts,
+            direction=direction,
+            suffixes=("", "__r"),
+            # a date key was promoted to datetime64 above, so a
+            # timedelta tolerance applies to both temporal families
+            tolerance=tolerance,
+            allow_exact_matches=allow_exact_matches,
+        )
+        # inner semantics: drop left rows with no qualifying version
+        r_ts_out = right_ts if right_ts != left_ts else f"{right_ts}__r"
+        merged = merged[merged[r_ts_out].notna()]
+        if l_is_date:
+            merged[left_ts] = merged[left_ts].dt.date
+        if r_is_date:
+            merged[r_ts_out] = merged[r_ts_out].dt.date
+        return merged[left_names + right_cols]
+
+    return (
+        left.groupBy(*on)
+        .cogroup(right.groupBy(*on))
+        .applyInPandas(merge, schema=out_schema)
+    )
 
 
 @pytest.fixture(scope="module")
@@ -54,6 +138,9 @@ def _key_rows(df):
     )
 
 
+GROUPED = {"union": asof_join_grouped, "cogroup": cogroup_asof}
+
+
 @pytest.mark.parametrize("engine", ["union", "cogroup"])
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
 def test_grouped_matches_broadcast(spark, sides, direction, engine):
@@ -62,9 +149,9 @@ def test_grouped_matches_broadcast(spark, sides, direction, engine):
         l, ph, on=["p_partkey"], left_ts="ship_date", right_ts="eff_date",
         direction=direction,
     )
-    got = asof_join_grouped(
+    got = GROUPED[engine](
         l, ph, on=["p_partkey"], left_ts="ship_date", right_ts="eff_date",
-        direction=direction, engine=engine,
+        direction=direction,
     )
     assert sorted(got.columns) == sorted(want.columns)
     assert _key_rows(got) == _key_rows(want)
@@ -91,15 +178,8 @@ def test_nearest_tie_prefers_backward_and_never_drops(spark):
         ],
         "k int, vts string, price double",
     ).selectExpr("k", "CAST(vts AS DATE) AS vts", "price")
-    plans = [
-        ("broadcast", lambda *a, **k: asof_join(*a, **k)),
-        ("union", lambda *a, **k: asof_join_grouped(*a, **k, engine="union")),
-        (
-            "cogroup",
-            lambda *a, **k: asof_join_grouped(*a, **k, engine="cogroup"),
-        ),
-    ]
-    for name, fn in plans:
+    plans = {"broadcast": asof_join, **GROUPED}
+    for name, fn in plans.items():
         got = {
             (r.k, str(r.ts)): r.price
             for r in fn(
@@ -115,8 +195,8 @@ def test_nearest_tie_prefers_backward_and_never_drops(spark):
 
 
 def test_union_engine_drops_null_ts_and_keeps_duplicates(spark):
-    """The union engine matches asof_join's inner contract where the
-    cogroup engine errors: NULL-ts facts drop, NULL-ts versions never
+    """The union plan matches asof_join's inner contract where the
+    cogroup oracle errors: NULL-ts facts drop, NULL-ts versions never
     match, and duplicate left rows each produce their own output row."""
     import datetime as dt
 
@@ -136,7 +216,7 @@ def test_union_engine_drops_null_ts_and_keeps_duplicates(spark):
     for direction in ("backward", "nearest"):
         out = asof_join_grouped(
             left, right, ["k"], "ts", "vts",
-            direction=direction, engine="union",
+            direction=direction,
         )
         rows = sorted((r.k, str(r.ts), r.tag) for r in out.collect())
         assert rows == [
@@ -170,7 +250,7 @@ def test_union_engine_ntz_micros_are_session_tz_independent(spark):
             )
             u = asof_join_grouped(
                 left, right, ["k"], "ts", "vts",
-                direction="nearest", engine="union",
+                direction="nearest",
             )
             # 500_001 us back vs 499_999 us forward -> fwd, in any zone
             assert [r.tag for r in b.collect()] == ["fwd"], zone
@@ -208,9 +288,8 @@ def test_tolerance_and_strictness_all_plans_agree(
     spark, direction, exact, tol_days
 ):
     """tolerance + allow_exact_matches must be honored bit-identically
-    by the broadcast plan, the pure-JVM union engine, and the pandas
-    cogroup engine (whose merge_asof implements both knobs natively —
-    an independent oracle)."""
+    by the broadcast plan, the pure-JVM union plan, and the pandas
+    cogroup oracle (whose merge_asof implements both knobs natively)."""
     import datetime as dt
 
     left, right = _tol_sides(spark)
@@ -218,12 +297,8 @@ def test_tolerance_and_strictness_all_plans_agree(
     kw = dict(direction=direction, tolerance=tol, allow_exact_matches=exact)
     outs = {
         "broadcast": asof_join(left, right, ["k"], "ts", "vts", **kw),
-        "union": asof_join_grouped(
-            left, right, ["k"], "ts", "vts", engine="union", **kw
-        ),
-        "cogroup": asof_join_grouped(
-            left, right, ["k"], "ts", "vts", engine="cogroup", **kw
-        ),
+        "union": asof_join_grouped(left, right, ["k"], "ts", "vts", **kw),
+        "cogroup": cogroup_asof(left, right, ["k"], "ts", "vts", **kw),
     }
     rows = {
         name: sorted((r.k, str(r.ts), r.tag) for r in df.collect())
@@ -257,7 +332,7 @@ def test_tolerance_strict_semantics_pinned(spark):
 def test_auto_routes_by_right_side_size(spark, sides):
     """asof_join_auto: a broadcast-sized versioned side takes the
     broadcast+max_by plan; with broadcast disabled (threshold -1) it
-    falls over to the pure-JVM union engine — with identical results
+    falls over to the pure-JVM union plan — with identical results
     either way."""
     from sales_data_warehouse_spark.operators.asof import asof_join_auto
 
@@ -279,7 +354,7 @@ def test_auto_routes_by_right_side_size(spark, sides):
 
 
 def test_composite_key_asof_all_plans_agree(spark):
-    """Multi-column ``on`` keys: the window/union engine partitions on
+    """Multi-column ``on`` keys: the window/union plan partitions on
     all of them; every plan must agree with the broadcast baseline."""
     import datetime as dt
 
@@ -306,12 +381,10 @@ def test_composite_key_asof_all_plans_agree(spark):
         ).collect()
     )
     assert want == [(1, "eu", "2024-02-01", 10.0), (1, "us", "2024-02-01", 20.0)]
-    for engine in ("union", "cogroup"):
+    for engine, fn in GROUPED.items():
         got = sorted(
             (r.k, r.region, str(r.ts), r.price)
-            for r in asof_join_grouped(
-                left, right, ["k", "region"], "ts", "vts", engine=engine
-            ).collect()
+            for r in fn(left, right, ["k", "region"], "ts", "vts").collect()
         )
         assert got == want, engine
 
@@ -327,14 +400,10 @@ def test_union_engine_empty_sides(spark):
     right = spark.createDataFrame(
         [(1, dt.date(2023, 1, 1), "v")], "k long, vts date, tag string"
     )
-    no_right = asof_join_grouped(
-        left, right.limit(0), ["k"], "ts", "vts", engine="union"
-    )
+    no_right = asof_join_grouped(left, right.limit(0), ["k"], "ts", "vts")
     assert no_right.count() == 0
     assert no_right.columns == ["k", "ts", "vts", "tag"]
-    no_left = asof_join_grouped(
-        left.limit(0), right, ["k"], "ts", "vts", engine="union"
-    )
+    no_left = asof_join_grouped(left.limit(0), right, ["k"], "ts", "vts")
     assert no_left.count() == 0
 
 
@@ -350,47 +419,3 @@ def test_tolerance_type_validation(spark):
             tolerance=dt.timedelta(days=-1),
         )
 
-
-def test_nearest_rejects_envelope_prefilter(spark):
-    df = spark.createDataFrame([(1, 1)], "k int, ts int")
-    with pytest.raises(ValueError, match="envelope_prefilter"):
-        asof_join(
-            df, df, ["k"], "ts", "ts",
-            direction="nearest", envelope_prefilter=True,
-        )
-
-
-def test_envelope_prefilter_preserves_results(spark):
-    """envelope_prefilter prunes right-side versions outside the left's
-    reachable time range without changing any result row."""
-    from sales_data_warehouse_spark.operators.asof import asof_join
-
-    left = spark.createDataFrame(
-        [(1, "2020-06-01"), (1, "2020-07-01"), (2, "2020-06-15")],
-        "k int, ts string",
-    ).selectExpr("k", "CAST(ts AS DATE) AS ts")
-    # versions include ones AFTER every left ts (prunable backward) and
-    # ancient ones (never prunable backward)
-    right = spark.createDataFrame(
-        [
-            (1, "2019-01-01", 10.0), (1, "2020-06-20", 11.0),
-            (1, "2021-01-01", 12.0),   # future: prunable
-            (2, "2020-01-01", 20.0), (2, "2022-01-01", 21.0),  # future
-        ],
-        "k int, vts string, price double",
-    ).selectExpr("k", "CAST(vts AS DATE) AS vts", "price")
-
-    plain = asof_join(left, right, ["k"], "ts", "vts").collect()
-    pruned = asof_join(
-        left, right, ["k"], "ts", "vts", envelope_prefilter=True
-    ).collect()
-    assert sorted(map(tuple, plain)) == sorted(map(tuple, pruned))
-    # and forward direction prunes from below, same results
-    fplain = asof_join(
-        left, right, ["k"], "ts", "vts", direction="forward"
-    ).collect()
-    fpruned = asof_join(
-        left, right, ["k"], "ts", "vts",
-        direction="forward", envelope_prefilter=True,
-    ).collect()
-    assert sorted(map(tuple, fplain)) == sorted(map(tuple, fpruned))

@@ -1,7 +1,8 @@
 """Property-based as-of join checks: for random event/version sets, the
 joined version must be the latest one at-or-before the event (backward)
-— verified against a brute-force python oracle — and both
-implementations (broadcast max_by, cogroup merge_asof) must agree."""
+— verified against a brute-force python oracle — and both plans
+(broadcast max_by, union window) and the cogroup merge_asof oracle must
+agree."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import datetime as dt
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from test_asof_grouped import cogroup_asof
 
 from sales_data_warehouse_spark.operators.asof import (
     asof_join,
@@ -109,8 +111,8 @@ def _oracle_tol(evts, vers, tol_days, exact):
 def test_asof_tolerance_matches_bruteforce_oracle(
     spark, evts, vers, tol_days, exact
 ):
-    """Random tolerance + strictness: all three physical plans must
-    equal the brute-force python oracle."""
+    """Random tolerance + strictness: both physical plans and the
+    cogroup oracle must equal the brute-force python oracle."""
     left = spark.createDataFrame(
         [
             (i, k, BASE + dt.timedelta(days=d))
@@ -129,14 +131,8 @@ def test_asof_tolerance_matches_bruteforce_oracle(
     )
     impls = [
         ("broadcast", lambda: asof_join(left, right, **kw)),
-        (
-            "union",
-            lambda: asof_join_grouped(left, right, engine="union", **kw),
-        ),
-        (
-            "cogroup",
-            lambda: asof_join_grouped(left, right, engine="cogroup", **kw),
-        ),
+        ("union", lambda: asof_join_grouped(left, right, **kw)),
+        ("cogroup", lambda: cogroup_asof(left, right, **kw)),
     ]
     for name, make in impls:
         rows = sorted(

@@ -1,95 +1,18 @@
-"""Surrogate-key strategy invariants (operators/ids): sequential ids are
-dense and ordered; hash ids are stable under repartitioning and
-collision-free on real keys; two-phase ids are dense without a global
-sort."""
+"""Surrogate-id formatting: ``padded_id`` pads to a width and widens
+past it instead of truncating, so ids stay unique after the rollover."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sales_data_warehouse_spark.operators.ids import (
-    hash_id,
-    sequential_id,
-    zip_index_id,
-)
-
-SF_DIR = "/root/testdata/sf0.01"
-
-
-def test_sequential_ids_dense_and_ordered(spark):
-    nat = spark.read.parquet(f"{SF_DIR}/nation.parquet")
-    out = sequential_id(nat, ["n_name"], out="nid", prefix="N", width=3)
-    rows = sorted((r["n_name"], r["nid"]) for r in out.collect())
-    # natural-key order == id order, ids dense from N001
-    assert [r[1] for r in rows] == [
-        f"N{i + 1:03d}" for i in range(len(rows))
-    ]
-
-
-def test_hash_ids_stable_and_unique(spark):
-    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet")
-    a = hash_id(cust, ["c_custkey"], out="hid")
-    b = hash_id(cust.repartition(23), ["c_custkey"], out="hid")
-    assert a.select("hid").distinct().count() == cust.count()
-    assert sorted(r["hid"] for r in a.collect()) == sorted(
-        r["hid"] for r in b.collect()
-    )
-
-
-def test_zip_index_ids_dense_without_global_sort(spark):
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").repartition(8)
-    out = zip_index_id(li, out="row_id")
-    n = li.count()
-    ids = out.agg(
-        F.min("row_id").alias("lo"),
-        F.max("row_id").alias("hi"),
-        F.countDistinct("row_id").alias("d"),
-    ).first()
-    # dense cover of [1, n] with no duplicates
-    assert (ids["lo"], ids["hi"], ids["d"]) == (1, n, n)
-    # two windows by design: the data-sized one is partitioned by __pid
-    # (local numbering); the only unpartitioned window runs over the
-    # per-partition counts (== numPartitions rows of metadata, never
-    # data). Every window mentioning the data ordering must be
-    # partitioned.
-    # (Window lines render as `Window [exprs], [partSpec], [orderSpec]`,
-    # with the partition group absent for unpartitioned windows.)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    data_windows = [
-        l for l in plan.splitlines() if "Window [" in l and "__local" in l
-    ]
-    assert data_windows, plan
-    assert all(l.count("], [") >= 2 for l in data_windows), data_windows
+from sales_data_warehouse_spark.functions.expressions import padded_id
 
 
 def test_padded_id_widens_instead_of_truncating(spark):
     # lpad truncates past the target width; padded_id must widen instead
     # so ids stay unique after the 10^width rollover.
-    from sales_data_warehouse_spark.functions.expressions import padded_id
-
     df = spark.createDataFrame(
         [(1,), (999,), (1000,), (1234567,)], ["n"]
     ).withColumn("id", padded_id("P", F.col("n"), 3))
     got = {r["n"]: r["id"] for r in df.collect()}
     assert got == {1: "P001", 999: "P999", 1000: "P1000", 1234567: "P1234567"}
-
-
-def test_sequential_id_widens_instead_of_truncating(spark):
-    from sales_data_warehouse_spark.operators.ids import sequential_id
-
-    df = spark.range(1, 1002).select(F.col("id").alias("k"))
-    out = sequential_id(df, ["k"], out="sid", prefix="X", width=3)
-    ids = [r["sid"] for r in out.collect()]
-    assert len(ids) == len(set(ids))
-    assert "X001" in ids and "X1001" in ids
-
-def test_sequential_id_pads_without_prefix(spark):
-    # prefix="" used to fall back to the raw row number, silently
-    # ignoring width.
-    from sales_data_warehouse_spark.operators.ids import sequential_id
-
-    df = spark.range(1, 13).select(F.col("id").alias("k"))
-    out = sequential_id(df, ["k"], out="sid", prefix="", width=4)
-    ids = [r["sid"] for r in out.orderBy("k").collect()]
-    assert ids[0] == "0001" and ids[11] == "0012"
-    assert all(len(i) == 4 for i in ids)

@@ -135,13 +135,13 @@ def test_resave_reopened_index_to_same_path(spark, docs, index, tmp_path):
 
 def test_load_recovers_mid_swap_crash(spark, docs, index, tmp_path):
     """A save that crashed between staged_overwrite's two renames
-    leaves ``postings`` missing and ``postings.stage_old`` holding the
-    intact previous generation — load must recover it, not fail."""
+    leaves the index directory missing and ``path.stage_old`` holding
+    the intact previous generation — load must recover it, not fail."""
     import os
 
     path = str(tmp_path / "crash")
     save_phrase_index(index, path)
-    os.rename(f"{path}/postings", f"{path}/postings.stage_old")
+    os.rename(path, f"{path}.stage_old")
     reopened = load_phrase_index(spark, path)
     want = {
         (r.doc_id, r.n_matches, r.first_pos)

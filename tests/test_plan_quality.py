@@ -332,14 +332,11 @@ def test_fits_broadcast_fails_to_the_large_plan(spark, monkeypatch):
 
 
 def test_join_multiway_routes_on_the_rewritten_table(spark, tmp_path):
-    # no size memo: after orders is rewritten past the threshold (and
-    # the table cache cleared, as load_table requires) the next build
-    # routes eager; a byte memo kept from the first build would keep
-    # the broadcast route
-    from sales_data_warehouse_spark.queries.corpus import (
-        clear_table_cache,
-        load_table,
-    )
+    # no stale memo: after orders is rewritten past the threshold the
+    # next build routes eager; a byte memo kept from the first build, or
+    # a table plan that outlives the rewrite, would keep the broadcast
+    # route
+    from sales_data_warehouse_spark.queries.corpus import load_table
 
     sf = str(tmp_path)
     tables = {
@@ -366,7 +363,6 @@ def test_join_multiway_routes_on_the_rewritten_table(spark, tmp_path):
         spark.range(n).selectExpr(
             "id AS o_orderkey", "id % 20 AS o_custkey"
         ).write.mode("overwrite").parquet(f"{sf}/orders.parquet")
-        clear_table_cache()
 
     def route():
         plan = _lib_executed_plan(
@@ -377,17 +373,14 @@ def test_join_multiway_routes_on_the_rewritten_table(spark, tmp_path):
         )
 
     write_orders(40)
-    try:
-        with _broadcast_threshold(spark, str(64 * 1024)):
-            assert route() == "broadcast"
-            write_orders(100_000)
-            orders = load_table(spark, sf, "orders").select(
-                "o_orderkey", "o_custkey"
-            )
-            assert _size_estimate(orders) * BROADCAST_SIZE_MARGIN > 64 * 1024
-            assert route() == "eager"
-    finally:
-        clear_table_cache()
+    with _broadcast_threshold(spark, str(64 * 1024)):
+        assert route() == "broadcast"
+        write_orders(100_000)
+        orders = load_table(spark, sf, "orders").select(
+            "o_orderkey", "o_custkey"
+        )
+        assert _size_estimate(orders) * BROADCAST_SIZE_MARGIN > 64 * 1024
+        assert route() == "eager"
 
 
 def test_size_routed_queries_submit_no_job_to_route(spark):

@@ -83,7 +83,7 @@ def test_asof_bigint_keys_exact_above_2_53(spark, engine):
     else:
         got = asof.asof_join_grouped(
             left, right.withColumnRenamed("ts", "rts"),
-            ["grp"], "ts", "rts", engine="union", **kw,
+            ["grp"], "ts", "rts", **kw,
         ).collect()
     # strict backward from 2^53+1 must find the version at 2^53 —
     # under a double cast both timestamps collapse and nothing matches
@@ -112,7 +112,7 @@ def test_asof_decimal_integral_keys_exact(spark, engine):
         got = asof.asof_join(left, right, ["grp"], "ts", "rts", **kw)
     else:
         got = asof.asof_join_grouped(
-            left, right, ["grp"], "ts", "rts", engine="union", **kw
+            left, right, ["grp"], "ts", "rts", **kw
         )
     assert [(r.tag, int(r.rts)) for r in got.collect()] == [
         ("older", int(base))

@@ -12,6 +12,8 @@ import warnings
 import pytest
 from pyspark.sql import functions as F
 
+from test_asof_grouped import cogroup_asof
+
 from sales_data_warehouse_spark.operators import asof
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -46,9 +48,9 @@ def test_asof_mixed_numeric_keys_warn(spark):
 def test_asof_numeric_vs_temporal_keys_warn(spark):
     """A numeric key against a temporal key compares raw numbers
     against epoch-microseconds — mismatched units, the worse schema
-    bug (r9 review). The grouped engines build the join in the micros
-    domain, so the plan constructs and SILENTLY mis-units: they must
-    warn. The broadcast plan compares the raw columns and Catalyst
+    bug (r9 review). The union plan and the cogroup oracle build the
+    join in the micros domain, so the plan constructs and SILENTLY
+    mis-units: they must warn. The broadcast plan compares the raw columns and Catalyst
     refuses to coerce DATE vs BIGINT — it hard-fails at analysis, but
     the warning still fires first (it explains WHY the join died)."""
     left = spark.createDataFrame([(1, 100)], "k long, ts long")
@@ -56,13 +58,9 @@ def test_asof_numeric_vs_temporal_keys_warn(spark):
         [(1, "2024-01-01")], "k long, ts string"
     ).withColumn("ts", F.col("ts").cast("date"))
     with pytest.warns(UserWarning, match="mixed numeric/temporal"):
-        asof.asof_join_grouped(
-            left, right, ["k"], "ts", "ts", engine="cogroup"
-        )
+        cogroup_asof(left, right, ["k"], "ts", "ts")
     with pytest.warns(UserWarning, match="mixed numeric/temporal"):
-        asof.asof_join_grouped(
-            left, right, ["k"], "ts", "ts", engine="union"
-        )
+        asof.asof_join_grouped(left, right, ["k"], "ts", "ts")
     from pyspark.errors import AnalysisException
 
     with pytest.warns(UserWarning, match="mixed numeric/temporal"):
